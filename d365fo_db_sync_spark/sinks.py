@@ -51,7 +51,14 @@ class ParquetTarget:
     Layout: ``<root>/_version`` names the live subdirectory; writers
     stage into a new uuid-dir and swap the pointer last. Readers resolve
     the pointer at read time.
+
+    Every sink offers the same two writes: :meth:`overwrite` for
+    snapshots and :meth:`merge` for deltas. The plain target is one
+    bucket with no pinned key, so its merge rewrites the whole table.
     """
+
+    key: str | None = None
+    n_buckets = 1
 
     def __init__(self, root: str, partition_by: list[str] | None = None) -> None:
         """``partition_by``: hive-style partition columns for every write
@@ -132,6 +139,16 @@ class ParquetTarget:
         return total
 
     # -- write --------------------------------------------------------------
+    def _swap_pointer(self, name: str, old: str | None = None) -> None:
+        """Atomically repoint ``_version`` at the staged ``name``, then
+        drop the superseded version directory ``old``."""
+        tmp = self._pointer() + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.write(name)
+        os.replace(tmp, self._pointer())
+        if old and os.path.basename(old) != name:
+            shutil.rmtree(old, ignore_errors=True)
+
     def overwrite(self, df: DataFrame) -> None:
         """Stage + atomic pointer swap; old version GC'd after the swap."""
         name = f"v_{uuid.uuid4().hex[:12]}"
@@ -140,11 +157,7 @@ class ParquetTarget:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(staged)
-        old = self.current_path()
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(name)
-        os.replace(tmp, self._pointer())
+        self._swap_pointer(name, self.current_path())
         # seed the schema memo with what we just wrote (parquet always
         # stores top-level fields nullable, so relax nullability to
         # match what inference would have returned). Partitioned
@@ -161,16 +174,91 @@ class ParquetTarget:
                 )
             }
         )
-        if old and os.path.abspath(old) != os.path.abspath(staged):
-            shutil.rmtree(old, ignore_errors=True)
 
-    def append(self, df: DataFrame, spark: SparkSession) -> None:
-        """Append = rewrite(current ∪ new). Parquet-append without a table
-        format is not atomic; the rewrite keeps the swap semantics."""
-        if self.exists():
-            self.overwrite(self.read(spark).unionByName(df))
-        else:
-            self.overwrite(df)
+    def merge(
+        self,
+        spark: SparkSession,
+        upserts: DataFrame,
+        doomed_keys: DataFrame | None = None,
+        replace_keys: bool = True,
+        evolve_schema: bool = False,
+        affected_buckets: "list[int] | None" = None,
+    ) -> int:
+        """Replace-or-insert ``upserts`` rows by key and delete the rows
+        of ``doomed_keys`` (a one-column key frame), rewriting only the
+        buckets those keys hash into. Returns the number of rewritten
+        buckets. With no live version the upserts are written by
+        :meth:`overwrite`. A plain target has no pinned key and takes
+        it from ``doomed_keys``, which it therefore requires.
+
+        ``replace_keys=False`` appends the upserts without removing rows
+        that share their keys: the shape of inverted indexes where many
+        rows legitimately share a key. The caller then must not append
+        rows that already exist (replay dedup).
+
+        ``affected_buckets`` optionally passes the changed keys' bucket
+        set when the caller has already computed it (e.g. folded into a
+        stats aggregate it was running anyway — sync.merge_upsert),
+        skipping this method's own distinct+collect job. It MUST equal
+        ``{_bucket_of(key)}`` over the upsert and doomed keys: a
+        superset would rewrite clean buckets, a subset would leave stale
+        rows live.
+
+        ``evolve_schema=True`` admits upserts whose column set differs
+        from the target's: new columns widen the table (NULL for all
+        historical rows), and columns missing from the upserts stay,
+        NULL-filled for the new rows. Type changes always raise. The
+        default (False) keeps the strict contract: any column drift is
+        an error.
+
+        Crash contract matches :meth:`overwrite`: the rewrite stages
+        into a fresh version directory and the pointer swap is the
+        single atomic publish."""
+        if not self.exists():
+            self.overwrite(upserts)
+            return self.n_buckets
+        if self.key is None and doomed_keys is None:
+            raise TypeError("a plain ParquetTarget.merge takes its key from doomed_keys")
+        key = self.key or doomed_keys.columns[0]
+        changed = upserts.select(key)
+        if doomed_keys is not None:
+            changed = changed.unionByName(doomed_keys.select(key))
+        affected = (
+            sorted(affected_buckets)
+            if affected_buckets is not None
+            else self._buckets_of(changed)
+        )
+        if not affected:
+            return 0
+
+        def rebuild(window: DataFrame) -> DataFrame:
+            survivors = (
+                window.join(changed, on=key, how="left_anti") if replace_keys else window
+            )
+            up = self._with_bucket(upserts)
+            if evolve_schema:
+                survivors, up = _align_for_evolution(survivors, up)
+            return survivors.unionByName(up, allowMissingColumns=False)
+
+        self._rewrite(spark, affected, rebuild)
+        return len(affected)
+
+    # -- layout hooks: what a merge touches, reads and publishes ------------
+    def _bucket_of(self, key_col):
+        from pyspark.sql import functions as F
+
+        return F.lit(0)
+
+    def _buckets_of(self, keys: DataFrame) -> list[int]:
+        return [0]  # everything, with no Spark job
+
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        return df
+
+    def _rewrite(self, spark: SparkSession, affected: list[int], rebuild) -> None:
+        """Publish ``rebuild(rows of the affected buckets)`` in place of
+        those buckets: here the whole table."""
+        self.overwrite(rebuild(self.read(spark)))
 
     def vacuum(self) -> list[str]:
         """Remove version directories that are not the live one —
@@ -417,11 +505,11 @@ class BucketedParquetTarget(ParquetTarget):
     """ParquetTarget whose rows are hive-partitioned by a hash bucket
     of the sync key — the partial-rewrite merge sink.
 
-    Why: the plain target's merge rewrites the WHOLE table every cycle
-    (survivors ∪ inserts -> full overwrite). At 100 TB with a 0.1%
-    change rate that is 1000x write amplification. Bucketing the key
-    into ``n_buckets`` hive partitions bounds each merge to the
-    buckets that actually contain changed keys:
+    Why: a merge rewrites every bucket its changed keys hash into, and
+    the plain target is a single bucket. At 100 TB with a 0.1% change
+    rate that is 1000x write amplification. Bucketing the key into
+    ``n_buckets`` hive partitions bounds each merge to the buckets that
+    actually contain changed keys:
 
     * affected buckets = distinct hash-bucket of changed keys (a
       <= n_buckets int set — tiny driver value, like the watermark);
@@ -434,6 +522,11 @@ class BucketedParquetTarget(ParquetTarget):
     * the same atomic pointer swap publishes the version, so readers
       never see a half-merged table and a crash leaves the old
       version live with the watermark un-advanced (T6 unchanged).
+
+    Single writer per table assumed (the orchestrator's
+    worker-per-table rule, same as StateStore): two concurrent merges
+    could each hardlink from the same old version and the loser's
+    buckets would be silently dropped by the winner's swap.
     """
 
     BUCKET_COL = "__kb"
@@ -522,98 +615,35 @@ class BucketedParquetTarget(ParquetTarget):
         from pyspark.sql import functions as F
 
         self._check_geometry_sidecar()
-        affected = sorted(
+        affected = self._buckets_of(keys)
+        live = super().read(spark)  # keeps __kb (a partition column)
+        return live.filter(F.col(self.BUCKET_COL).isin(affected)).drop(self.BUCKET_COL)
+
+    # bound here as well as inherited, so instrumentation (perfbench's
+    # tracer) can wrap the partial-rewrite merge apart from the plain one
+    merge = ParquetTarget.merge
+
+    def _buckets_of(self, keys: DataFrame) -> list[int]:
+        from pyspark.sql import functions as F
+
+        return sorted(
             r["b"]
             for r in keys.select(self._bucket_of(F.col(self.key)).alias("b"))
             .distinct()
             .collect()
         )
-        live = super().read(spark)  # keeps __kb (a partition column)
-        return live.filter(F.col(self.BUCKET_COL).isin(affected)).drop(self.BUCKET_COL)
 
-    def merge(
-        self,
-        spark: SparkSession,
-        upserts: DataFrame,
-        doomed_keys: DataFrame | None = None,
-        replace_keys: bool = True,
-        evolve_schema: bool = False,
-        affected_buckets: "list[int] | None" = None,
-    ) -> int:
-        """Replace-or-insert ``upserts`` rows and delete ``doomed_keys``
-        rows, rewriting ONLY the buckets their keys hash into. Returns
-        the number of rewritten buckets. Falls back to a plain
-        overwrite when no live version exists.
-
-        ``affected_buckets`` optionally passes the changed keys' bucket
-        set when the caller has already computed it (e.g. folded into a
-        stats aggregate it was running anyway — sync.merge_upsert),
-        skipping this method's own distinct+collect job. It MUST equal
-        ``{pmod(xxhash64(key), n_buckets)}`` over the changed keys:
-        a superset would rewrite clean buckets, a subset would leave
-        stale rows live.
-
-        ``evolve_schema=True`` admits upserts whose column set differs
-        from the target's: new columns widen the table (NULL for all
-        historical rows — including untouched carried-forward buckets,
-        whose old-schema files are read through the published unified
-        schema sidecar), and columns missing from the upserts stay,
-        NULL-filled for the new rows. Type changes always raise. The
-        default (False) keeps the strict contract: any column drift is
-        an error, which is what a sync pipeline wants unless a schema
-        migration is explicitly in flight.
-
-        Crash contract matches ParquetTarget.overwrite: everything
-        stages into a fresh version directory and the pointer swap is
-        the single atomic publish — a failure anywhere before it
-        leaves the previous version live and complete. Single writer
-        per table assumed (the orchestrator's worker-per-table rule,
-        same as StateStore): two concurrent merges could each hardlink
-        from the same old version and the loser's buckets would be
-        silently dropped by the winner's swap."""
-        import uuid as _uuid
+    def _rewrite(self, spark: SparkSession, affected: list[int], rebuild) -> None:
+        """Stage only the affected buckets; hardlink the rest forward."""
+        import json
 
         from pyspark.sql import functions as F
 
-        if not self.exists():
-            self.overwrite(upserts)
-            return self.n_buckets
-
         self._check_geometry_sidecar()
-        changed = upserts.select(self.key)
-        if doomed_keys is not None:
-            changed = changed.unionByName(doomed_keys.select(self.key))
-        affected = (
-            sorted(affected_buckets)
-            if affected_buckets is not None
-            else sorted(
-                r["b"]
-                for r in changed.select(self._bucket_of(F.col(self.key)).alias("b"))
-                .distinct()
-                .collect()
-            )
-        )
-        if not affected:
-            return 0
-
         live = super().read(spark)  # keeps __kb (a partition column)
         # partition-pruned: only affected buckets' files are scanned
-        window = live.filter(F.col(self.BUCKET_COL).isin(affected))
-        # replace_keys=True: upsert semantics (a key's old rows die).
-        # False: multi-row-per-key APPEND into the affected buckets —
-        # the shape of inverted indexes (LSH band buckets) where many
-        # rows legitimately share a key; the caller is responsible for
-        # not appending rows that already exist (replay dedup).
-        if replace_keys:
-            survivors = window.join(changed, on=self.key, how="left_anti")
-        else:
-            survivors = window
-        up = self._with_bucket(upserts)
-        if evolve_schema:
-            survivors, up = _align_for_evolution(survivors, up)
-        new_rows = survivors.unionByName(up, allowMissingColumns=False)
-
-        name = f"v_{_uuid.uuid4().hex[:12]}"
+        new_rows = rebuild(live.filter(F.col(self.BUCKET_COL).isin(affected)))
+        name = f"v_{uuid.uuid4().hex[:12]}"
         staged = os.path.join(self.root, name)
         (
             new_rows.repartition(max(1, len(affected)), F.col(self.BUCKET_COL))
@@ -625,10 +655,8 @@ class BucketedParquetTarget(ParquetTarget):
         # footers, so without this pin a later read's schema would
         # depend on which file Spark sampled. Written on EVERY merge —
         # once a table has ever evolved, the pin must persist.
-        import json as _json
-
         with open(os.path.join(staged, self.SCHEMA_SIDECAR), "w", encoding="utf-8") as f:
-            _json.dump(new_rows.schema.jsonValue(), f)
+            json.dump(new_rows.schema.jsonValue(), f)
         # carry untouched buckets forward as hardlinks: metadata-only
         old = self.current_path()
         affected_dirs = {f"{self.BUCKET_COL}={b}" for b in affected}
@@ -643,13 +671,7 @@ class BucketedParquetTarget(ParquetTarget):
             for fn in os.listdir(src):
                 if fn.endswith(".parquet"):
                     os.link(os.path.join(src, fn), os.path.join(dst, fn))
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(name)
-        os.replace(tmp, self._pointer())
-        if old and os.path.abspath(old) != os.path.abspath(staged):
-            shutil.rmtree(old, ignore_errors=True)
-        return len(affected)
+        self._swap_pointer(name, old)
 
 
 class ManifestParquetTarget(BucketedParquetTarget):
@@ -1291,10 +1313,7 @@ class ManifestParquetTarget(BucketedParquetTarget):
                         f"derived from {expected_parent!r} — another writer "
                         "published in between; re-read and retry"
                     )
-            tmp = self._pointer() + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write(name)
-            os.replace(tmp, self._pointer())
+            self._swap_pointer(name)
             # publish log AFTER the pointer swap: logging first would list a
             # never-published version (its manifest already exists in the
             # staged dir, so a manifest-existence filter can't catch it).
@@ -1367,18 +1386,10 @@ class ManifestParquetTarget(BucketedParquetTarget):
         in manifest mode the pruning is an exact driver-side file-list
         cut: no directory listing, no partition discovery, just the
         manifest entries of the affected buckets."""
-        from pyspark.sql import functions as F
-
         m = self._load_manifest()
         if m is None:
             raise FileNotFoundError(f"no live version under {self.root}")
-        affected = {
-            r["b"]
-            for r in keys.select(self._bucket_of(F.col(self.key)).alias("b"))
-            .distinct()
-            .collect()
-        }
-        files = [f for b in sorted(affected) for f in m["buckets"].get(b, [])]
+        files = [f for b in self._buckets_of(keys) for f in m["buckets"].get(b, [])]
         return self._read_files(
             spark, files, m["schema"], m.get("tombstones")
         ).drop(self.DATA_BUCKET_COL)
@@ -1518,68 +1529,21 @@ class ManifestParquetTarget(BucketedParquetTarget):
         # retires the entries in the same commit
         return total - sum(t["rows"] for t in m.get("tombstones", []))
 
-    def merge(
-        self,
-        spark: SparkSession,
-        upserts: DataFrame,
-        doomed_keys: DataFrame | None = None,
-        replace_keys: bool = True,
-        evolve_schema: bool = False,
-        affected_buckets: "list[int] | None" = None,
-    ) -> int:
-        from pyspark.sql import functions as F
-
-        if not self.exists():
-            self.overwrite(upserts)
-            return self.n_buckets
-
-        changed = upserts.select(self.key)
-        if doomed_keys is not None:
-            changed = changed.unionByName(doomed_keys.select(self.key))
-        # affected_buckets: same precomputed-bucket-set contract as
-        # BucketedParquetTarget.merge (exact set of the changed keys'
-        # buckets, skips the distinct+collect job)
-        affected = (
-            sorted(affected_buckets)
-            if affected_buckets is not None
-            else sorted(
-                r["b"]
-                for r in changed.select(self._bucket_of(F.col(self.key)).alias("b"))
-                .distinct()
-                .collect()
-            )
-        )
-        if not affected:
-            return 0
-
+    def _rewrite(self, spark: SparkSession, affected: list[int], rebuild) -> None:
+        """Stage only the affected buckets; carry the rest forward by
+        manifest reference. Under evolve, carried buckets need no
+        rewrite: the published schema widens, and _read_files'
+        explicit-schema read surfaces absent columns in old files as
+        NULL."""
         parent, m = self._live_snapshot()
         aff_files = [f for b in affected for f in m["buckets"].get(b, [])]
         window = self._read_files(
             spark, aff_files, m["schema"], m.get("tombstones")
-        ).withColumnRenamed(
-            self.DATA_BUCKET_COL, self.BUCKET_COL
-        )
-        if replace_keys:
-            survivors = window.join(changed, on=self.key, how="left_anti")
-        else:
-            survivors = window
-        up = self._with_bucket(upserts)
-        if evolve_schema:
-            # carried-forward buckets need no rewrite: the manifest's
-            # published schema (derived from the merged frame below)
-            # widens, and _read_files' explicit-schema read surfaces
-            # absent columns in old files as NULL
-            survivors, up = _align_for_evolution(survivors, up)
-        new_rows = survivors.unionByName(up, allowMissingColumns=False)
-        carried = {
-            b: fs for b, fs in m["buckets"].items() if b not in set(affected)
-        }
+        ).withColumnRenamed(self.DATA_BUCKET_COL, self.BUCKET_COL)
         # an affected bucket emptied by deletes writes no files and must
         # not carry its old entry: seed empty lists, staged dirs override
-        for b in affected:
-            carried[b] = []
-        self._write_version(new_rows, carried=carried, expected_parent=parent)
-        return len(affected)
+        carried = {**m["buckets"], **{b: [] for b in affected}}
+        self._write_version(rebuild(window), carried=carried, expected_parent=parent)
 
     def delete_range(self, spark: SparkSession, lo, hi) -> dict:
         """``DELETE WHERE lo <= key <= hi`` planned from the zone maps
@@ -2272,10 +2236,7 @@ class ManifestParquetTarget(BucketedParquetTarget):
         os.makedirs(staged, exist_ok=True)
         with open(os.path.join(staged, self.MANIFEST), "w", encoding="utf-8") as f:
             json.dump(manifest, f)
-        tmp = dest._pointer() + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(out_name)
-        os.replace(tmp, dest._pointer())
+        dest._swap_pointer(out_name)
         with open(
             os.path.join(dest_root, self.VERSION_LOG), "a", encoding="utf-8"
         ) as f:

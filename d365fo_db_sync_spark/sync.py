@@ -6,9 +6,10 @@ onto DataFrame ops + an atomic-rewrite sink:
 * control scan + change-volume evaluation  -> scans.control_scan + counts
 * cost-based mode selection (R5/T2)        -> NO_CHANGE / INCREMENTAL /
   TRUNCATE / STANDARD, threshold 40% (AppConfiguration.cs:39)
-* 3-step delete + selective insert (T3)    -> semi/anti-join recomposition:
-  a parquet target can't DELETE, so "delete" = rebuild the survivors and
-  atomically swap (sinks.ParquetTarget)
+* 3-step delete + selective insert (T3)    -> one sink call,
+  target.merge(upserts, doomed_keys): every sink deletes the doomed and
+  upserted keys, inserts the upserts and publishes atomically; only which
+  files it rewrites depends on its layout (sinks.ParquetTarget)
 * late-data widening (T4)                  -> fetch threshold =
   min(stored watermark, min version among keys missing from target)
   (CopyOrchestrator.cs:1106-1123)
@@ -35,7 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d365fo_db_sync_spark import delta
-from d365fo_db_sync_spark.sinks import ParquetTarget
+from d365fo_db_sync_spark.sinks import (
+    ConcurrentWriteError,
+    ParquetTarget,
+    _align_for_evolution,
+)
 from d365fo_db_sync_spark.state import StateStore, TableState
 
 NO_CHANGE = "NO_CHANGE"
@@ -56,7 +61,8 @@ class SyncConfig:
     #: micro-batch carries it, _compact_last_event uses it as the
     #: tiebreaker instead of monotonically_increasing_id, whose value
     #: encodes (partitionId, rowIndex) — partition order, NOT true
-    #: arrival order, for batches spanning >1 partition.
+    #: arrival order, for batches spanning >1 partition. Like the
+    #: tombstone marker, the merge consumes it and does not write it.
     sequence_col: str | None = None
 
 
@@ -194,15 +200,11 @@ class SyncEngine:
         is_tomb = (
             F.coalesce(F.col(tomb), F.lit(False)) if tomb in batch.columns else F.lit(False)
         )
-        from d365fo_db_sync_spark.sinks import BucketedParquetTarget
-
         batch = self._compact_last_event(batch).cache()
         # one agg job covers live count, tombstone count, watermark
-        # maxima (previously two jobs: upsert agg + tombstone count),
-        # AND — for bucketed targets — the changed keys' bucket set, so
-        # merge() below skips its own distinct+collect job (r15: one
-        # Spark job per micro-batch instead of two on the CDC path)
-        bucketed = isinstance(target, BucketedParquetTarget)
+        # maxima AND the changed keys' bucket set, so merge() below
+        # skips its own distinct+collect job (r15: one Spark job per
+        # micro-batch instead of two on the CDC path)
         row = batch.agg(
             F.count(F.when(~is_tomb, 1)).alias("n"),
             F.count(F.when(is_tomb, 1)).alias("n_dead"),
@@ -210,38 +212,24 @@ class SyncEngine:
             F.max(F.when(~is_tomb, F.col(ver))).alias("max_ver")
             if ver in batch.columns
             else F.lit(None).alias("max_ver"),
-            F.collect_set(target._bucket_of(F.col(key))).alias("aff")
-            if bucketed
-            else F.lit(None).alias("aff"),
+            F.collect_set(target._bucket_of(F.col(key))).alias("aff"),
         ).first()
         n_dead = row["n_dead"]
         report = SyncReport(table=name, mode=INCREMENTAL, inserted=row["n"], deleted=n_dead)
         if row["n"] == 0 and n_dead == 0:
             report.mode = NO_CHANGE
-            batch.unpersist()
-            return report
-        upserts = batch.filter(~is_tomb).drop(tomb) if tomb in batch.columns else batch
-        if bucketed and target.exists():
-            # partial-rewrite fast path: only the buckets containing
-            # changed keys are read and rewritten; untouched buckets
-            # carry forward as hardlinks. Same atomic swap + same
-            # state-commit discipline, ~1/write-amplification of the
-            # full rewrite at low change rates.
-            tombstoned = (
-                batch.filter(is_tomb).select(key)
-                if tomb in batch.columns
-                else batch.limit(0).select(key)
-            )
+        else:
+            consumed = [c for c in (tomb, self.config.sequence_col) if c]
+            upserts = batch.filter(~is_tomb).drop(*consumed)
+            tombstoned = batch.filter(is_tomb).select(key)
             # retry on optimistic-concurrency conflict: merge() re-reads
-            # the live manifest on every call, so a retry re-derives the
+            # the live version on every call, so a retry re-derives the
             # carried references from the interloper's commit — the
             # standard OCC loop. The merge itself is idempotent on the
             # same batch (T5), so a retry after a conflicting publish is
             # semantically a fresh merge of the same delta. Bounded: a
             # writer that keeps losing the race after 3 attempts gives
             # up loudly rather than spinning against a hot table.
-            from d365fo_db_sync_spark.sinks import ConcurrentWriteError
-
             for attempt in range(3):
                 try:
                     target.merge(
@@ -256,15 +244,6 @@ class SyncEngine:
                     if attempt == 2:
                         raise
             self._commit_state(name, row["max_key"], row["max_ver"])
-        else:
-            if target.exists():
-                tgt_df = target.read(self.spark)
-                doomed = batch.select(key)  # upsert keys ∪ tombstoned keys
-                survivors = tgt_df.join(doomed, on=key, how="left_anti")
-                new_tgt = self._union_for_rewrite(survivors, upserts, evolve_schema)
-            else:
-                new_tgt = upserts
-            self._swap_and_commit(name, new_tgt, target, row["max_key"], row["max_ver"])
         batch.unpersist()
         report.duration_sec = time.time() - t0
         return report
@@ -425,34 +404,19 @@ class SyncEngine:
         # template's @sysRowVersionFilter slot becomes this predicate)
         fetched = fetcher.incremental(fetch_ts, fetch_floor)
 
-        # T3: three-step merge
+        # T3: three-step merge. doomed = excess (J5 complement) ∪
+        # modified (J4); fetched rows replace-or-insert (T5: a replayed
+        # row replaces its own copy). The sink rewrites only what its
+        # layout needs to.
         changed_keys = control.filter(F.col(ver) > F.lit(state.tgt_ts)).select(key)
-        from d365fo_db_sync_spark.sinks import BucketedParquetTarget
-
-        if isinstance(target, BucketedParquetTarget):
-            # partial-rewrite path: doomed = excess (J5 complement) ∪
-            # modified (J4); fetched rows replace-or-insert. Only the
-            # buckets containing doomed/fetched keys are rewritten —
-            # the reference's core incremental cycle without the
-            # whole-table write.
-            excess = tgt_df.join(control.select(key), on=key, how="left_anti").select(key)
-            target.merge(
-                self.spark,
-                fetched,
-                excess.unionByName(changed_keys),
-                evolve_schema=evolve_schema,
-            )
-            self._commit_state(name, max_key, max_ver)
-        else:
-            # rewrite form: survivors ∪ idempotent inserts, full overwrite
-            survivors = (
-                tgt_df.join(control.select(key), on=key, how="left_semi")  # J5
-                .join(changed_keys, on=key, how="left_anti")  # J4
-            )
-            # T5: idempotent insert — only rows whose key is absent post-delete
-            inserts = fetched.join(survivors.select(key), on=key, how="left_anti")
-            new_tgt = self._union_for_rewrite(survivors, inserts, evolve_schema)
-            self._swap_and_commit(name, new_tgt, target, max_key, max_ver)
+        excess = tgt_df.join(control.select(key), on=key, how="left_anti").select(key)
+        target.merge(
+            self.spark,
+            fetched,
+            excess.unionByName(changed_keys),
+            evolve_schema=evolve_schema,
+        )
+        self._commit_state(name, max_key, max_ver)
         # accounting from the fused agg + the written footers: zero extra
         # jobs (previously a full recomputation of inserts + survivors)
         report.deleted = max(0, tgt_total - survivors_cnt)
@@ -609,23 +573,23 @@ class SyncEngine:
         ).cache()
         counts = {r["change_type"]: r["cnt"] for r in delta.change_counts(classified).collect()}
 
-        doomed = classified.filter(
-            F.col("change_type").isin(delta.MODIFIED, delta.DELETED)
-        ).select(key)
         incoming_keys = classified.filter(
             F.col("change_type").isin(delta.MODIFIED, delta.NEW)
         ).select(key)
-
-        survivors = tgt_df.join(doomed, on=key, how="left_anti")
-        inserts = fetched.join(incoming_keys, on=key, how="left_semi")
-        new_tgt = self._union_for_rewrite(survivors, inserts, evolve_schema)
+        deleted_keys = classified.filter(F.col("change_type") == delta.DELETED).select(key)
 
         report = SyncReport(table=name, mode=STANDARD, classification=counts)
         report.inserted = counts.get(delta.MODIFIED, 0) + counts.get(delta.NEW, 0)
         report.deleted = counts.get(delta.MODIFIED, 0) + counts.get(delta.DELETED, 0)
+        target.merge(
+            self.spark,
+            fetched.join(incoming_keys, on=key, how="left_semi"),
+            deleted_keys,
+            evolve_schema=evolve_schema,
+        )
         # full-window fetch: the fetched maxima ARE the source's truth,
         # so overwrite (a restore-lowered rowversion must stick)
-        self._swap_and_commit(name, new_tgt, target, max_key, max_ver, overwrite=True)
+        self._commit_state(name, max_key, max_ver, overwrite=True)
         classified.unpersist()
         fetched.unpersist()
         return report
@@ -645,27 +609,9 @@ class SyncEngine:
         reference's truncate semantics)."""
         if not evolve_schema or not target.exists():
             return fetched
-        from d365fo_db_sync_spark.sinks import _align_for_evolution
-
         tgt_shape = target.read(self.spark).limit(0)
         _s2, widened = _align_for_evolution(tgt_shape, fetched)
         return widened
-
-    @staticmethod
-    def _union_for_rewrite(
-        survivors: DataFrame, inserts: DataFrame, evolve_schema: bool
-    ) -> DataFrame:
-        """Survivors ∪ inserts for the full-rewrite paths. Strict mode
-        projects inserts onto the target's columns (any missing column
-        errors — the pre-evolution contract); evolve mode aligns both
-        sides widen-and-retain (sinks._align_for_evolution), the same
-        semantics the partial-rewrite merge applies bucket-locally."""
-        if not evolve_schema:
-            return survivors.unionByName(inserts.select(*survivors.columns))
-        from d365fo_db_sync_spark.sinks import _align_for_evolution
-
-        s2, u2 = _align_for_evolution(survivors, inserts)
-        return s2.unionByName(u2)
 
     def _overwrite_and_commit(
         self, name: str, df: DataFrame, target: ParquetTarget, max_key, max_ver
@@ -673,20 +619,16 @@ class SyncEngine:
         # write once, then count from the written footers — no pre-write
         # cache+count materialization pass. Every caller is a snapshot
         # path (full refresh), so the state commit OVERWRITES.
-        self._swap_and_commit(name, df, target, max_key, max_ver, overwrite=True)
+        target.overwrite(df)
+        self._commit_state(name, max_key, max_ver, overwrite=True)
         return target.num_rows()
 
-    def _swap_and_commit(
-        self,
-        name: str,
-        new_tgt: DataFrame,
-        target: ParquetTarget,
-        max_key,
-        max_ver,
-        overwrite: bool = False,
+    def _commit_state(
+        self, name: str, max_key, max_ver, overwrite: bool = False
     ) -> None:
-        """Sink swap first, state second — a failure between the two leaves
-        a valid target with a stale watermark, which the next run repairs
+        """Commit the fetched maxima AFTER the sink published its write.
+        Sink first, state second — a failure between the two leaves a
+        valid target with a stale watermark, which the next run repairs
         idempotently (T5/T6). State NEVER advances on a failed write.
 
         Two commit semantics, matching the reference:
@@ -710,15 +652,6 @@ class SyncEngine:
           would classify NO_CHANGE and be silently skipped until
           store.clear(). A full refresh must be able to LOWER the
           watermark to the rebuilt source's true maximum."""
-        target.overwrite(new_tgt)
-        self._commit_state(name, max_key, max_ver, overwrite=overwrite)
-
-    def _commit_state(
-        self, name: str, max_key, max_ver, overwrite: bool = False
-    ) -> None:
-        """State commit alone — for sinks that already published their
-        data atomically (BucketedParquetTarget.merge). Same semantics
-        as the tail of _swap_and_commit."""
         cfg = self.config
         next_seq = None
         if max_key is not None:

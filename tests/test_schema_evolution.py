@@ -14,7 +14,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from d365fo_db_sync_spark.sinks import BucketedParquetTarget, ManifestParquetTarget
+from d365fo_db_sync_spark.sinks import (
+    BucketedParquetTarget,
+    ManifestParquetTarget,
+    ParquetTarget,
+)
 from d365fo_db_sync_spark.suite import scratch_dir
 
 SINKS = [BucketedParquetTarget, ManifestParquetTarget]
@@ -128,19 +132,24 @@ def test_strategy_dsl_parses_evolve():
     assert not s3.evolve
 
 
-def test_sync_engine_evolves_source_drift(spark):
+@pytest.mark.parametrize(
+    "make_target",
+    [ParquetTarget, lambda root: BucketedParquetTarget(root, key="RecId", n_buckets=4)],
+    ids=["plain", "hardlink"],
+)
+def test_sync_engine_evolves_source_drift(spark, make_target):
     """End-to-end: a source that grows a column mid-stream syncs through
     SyncEngine with evolve_schema — history NULL-backfills, new rows
     carry the new column; without the flag the same drift errors."""
     from d365fo_db_sync_spark.state import StateStore
-    from d365fo_db_sync_spark.sync import SyncConfig, SyncEngine
+    from d365fo_db_sync_spark.sync import INCREMENTAL, SyncConfig, SyncEngine
 
     work = scratch_dir("evo_sync_")
     store = StateStore(work + "/state.json")
     engine = SyncEngine(
         spark, store, SyncConfig(key="RecId", version="Ver", record_count=1000)
     )
-    t = BucketedParquetTarget(work + "/t", key="RecId", n_buckets=4)
+    t = make_target(work + "/t")
 
     src1 = spark.range(0, 50).select(
         F.col("id").alias("RecId"), (F.col("id") + 10).alias("Ver")
@@ -155,7 +164,7 @@ def test_sync_engine_evolves_source_drift(spark):
     with pytest.raises(Exception):
         engine.sync_table("T", src2, t)
     report = engine.sync_table("T", src2, t, evolve_schema=True)
-    assert report.mode != "NoChange"
+    assert report.mode == INCREMENTAL  # 20 of 60 rows changed: 33% < 40%
     out = t.read(spark)
     assert "NewCol" in out.columns
     assert out.count() == 60
@@ -175,8 +184,6 @@ def test_truncate_fallback_keeps_evolved_schema(spark):
     engine = SyncEngine(
         spark, store, SyncConfig(key="RecId", version="Ver", record_count=1000)
     )
-    from d365fo_db_sync_spark.sinks import ParquetTarget
-
     t = ParquetTarget(work + "/t")
     src1 = spark.range(0, 40).select(
         F.col("id").alias("RecId"), (F.col("id") + 10).alias("Ver"),

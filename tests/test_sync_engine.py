@@ -224,6 +224,16 @@ def test_cdc_batch_compacted_to_last_event_per_key(env):
     assert got[1007] == 44.0  # update after tombstone resurrects
 
 
+def test_cdc_empty_batch_is_timed_no_change(env):
+    spark, store, engine, target = env
+    engine.merge_upsert("T", df_of(spark, make_rows(10)), target)
+    v = target.current_path()
+    rpt = engine.merge_upsert("T", df_of(spark, make_rows(1)).limit(0), target)
+    assert rpt.mode == NO_CHANGE
+    assert rpt.duration_sec > 0  # timed like every other report
+    assert target.current_path() == v
+
+
 def test_cdc_state_never_regresses(env):
     # ADVICE r1: a batch touching only old keys must not move the T7 fence
     # or watermark backwards, and an all-tombstone batch must not erase it.
@@ -468,14 +478,30 @@ def test_partitioned_target_prunes_on_read(spark, tmp_path):
     assert "PartitionFilters" in explain_formatted(pruned)
 
 
-def test_bucketed_merge_matches_full_rewrite(env, tmp_path):
-    # BucketedParquetTarget.merge must produce exactly the state the
-    # full-rewrite path produces, for upserts + tombstones together.
-    from d365fo_db_sync_spark.sinks import BucketedParquetTarget
+def _three_sinks(tmp_path):
+    """One target of each sink kind, for the merge-contract tests: every
+    sink must end a cycle with the same rows and the same state."""
+    from d365fo_db_sync_spark.sinks import BucketedParquetTarget, ManifestParquetTarget
 
+    return {
+        "plain": ParquetTarget(str(tmp_path / "plain")),
+        "bucketed": BucketedParquetTarget(str(tmp_path / "bkt"), key="RecId", n_buckets=8),
+        "manifest": ManifestParquetTarget(str(tmp_path / "mfst"), key="RecId", n_buckets=8),
+    }
+
+
+def _rows_of(tgt, spark):
+    return sorted(
+        (r["RecId"], r["SysRowVersion"], r["AMOUNT"]) for r in tgt.read(spark).collect()
+    )
+
+
+@pytest.mark.fast
+def test_bucketed_merge_matches_full_rewrite(env, tmp_path):
+    # every sink's merge must produce exactly the state the whole-table
+    # rewrite produces, for upserts + tombstones together.
     spark, store, engine, _ = env
-    plain = ParquetTarget(str(tmp_path / "plain"))
-    bucketed = BucketedParquetTarget(str(tmp_path / "bkt"), key="RecId", n_buckets=8)
+    sinks = _three_sinks(tmp_path)
 
     base = make_rows(60)
     batch = spark.createDataFrame(
@@ -486,18 +512,14 @@ def test_bucketed_merge_matches_full_rewrite(env, tmp_path):
         ],
         SCHEMA + ", __deleted boolean",
     )
-    for tgt in (plain, bucketed):
-        engine.merge_upsert(f"T_{tgt.root[-5:]}", df_of(spark, base), tgt)
-        engine.merge_upsert(f"T_{tgt.root[-5:]}", batch, tgt)
+    for label, tgt in sinks.items():
+        engine.merge_upsert(f"T_{label}", df_of(spark, base), tgt)
+        engine.merge_upsert(f"T_{label}", batch, tgt)
 
-    def state(tgt):
-        return sorted(
-            (r["RecId"], r["SysRowVersion"], r["AMOUNT"])
-            for r in tgt.read(spark).collect()
-        )
-
-    assert state(plain) == state(bucketed)
-    assert "__kb" not in bucketed.read(spark).columns  # bucket col hidden
+    finals = {label: _rows_of(tgt, spark) for label, tgt in sinks.items()}
+    assert finals["plain"] == finals["bucketed"] == finals["manifest"]
+    assert store.get("T_plain") == store.get("T_bucketed") == store.get("T_manifest")
+    assert "__kb" not in sinks["bucketed"].read(spark).columns  # bucket col hidden
 
 
 def test_bucketed_merge_rewrites_only_affected_buckets(env, tmp_path):
@@ -550,13 +572,13 @@ def test_bucketed_merge_empty_change_set_is_noop(env, tmp_path):
     assert tgt.current_path() == v  # version untouched
 
 
+@pytest.mark.fast
 def test_optimized_path_on_bucketed_target_matches_plain(env, tmp_path):
     # the reference's core incremental cycle (control scan -> 3-step
-    # merge) must produce identical state through the partial-rewrite
-    # sink as through the full-rewrite sink — deletes, modifications,
-    # window excess, and late rows included.
-    from d365fo_db_sync_spark.sinks import BucketedParquetTarget
-
+    # merge) and the state-loss STANDARD cycle must produce identical
+    # rows and state through the partial-rewrite sinks as through the
+    # full-rewrite sink — deletes, modifications, window excess, and
+    # late rows included.
     spark, store, engine, _ = env
     rows = make_rows(100)
     deleted = {1000 + 7, 1000 + 8}
@@ -571,23 +593,33 @@ def test_optimized_path_on_bucketed_target_matches_plain(env, tmp_path):
         new_rows.append(r)
     new_rows.append((3000, 2, 5, None, dt.datetime(2024, 1, 15), 7.0))  # late, old ver
 
-    finals = {}
-    for label, tgt in (
-        ("plain", ParquetTarget(str(tmp_path / "p"))),
-        ("bucketed", BucketedParquetTarget(str(tmp_path / "bk"), key="RecId", n_buckets=8)),
-    ):
+    # state loss, then modifies and deletes only: the window keeps its
+    # lower bound, so STANDARD's below-window defect stays out of play
+    standard_rows = [
+        (r[0], r[1] + 1, r[2] + 5000, r[3], r[4], -r[5]) if r[0] % 15 == 0 else r
+        for r in new_rows
+        if r[0] not in {1000 + 31, 1000 + 64}
+    ]
+
+    finals, states = {}, {}
+    for label, tgt in _three_sinks(tmp_path).items():
         name = f"TO_{label}"
         r1 = engine.sync_table(name, df_of(spark, rows), tgt)
         assert r1.mode == STANDARD
         r2 = engine.sync_table(name, df_of(spark, new_rows), tgt)
         assert r2.mode == INCREMENTAL, (label, r2)
-        finals[label] = sorted(
-            (r["RecId"], r["SysRowVersion"], r["AMOUNT"])
-            for r in tgt.read(spark).collect()
-        )
+        incremental_rows = _rows_of(tgt, spark)
         st = store.get(name)
         assert st.src_ts == max(x[2] for x in new_rows)
-    assert finals["plain"] == finals["bucketed"]
+        store.clear(name)
+        r3 = engine.sync_table(name, df_of(spark, standard_rows), tgt)
+        assert r3.mode == STANDARD, (label, r3)
+        assert r3.classification.get("deleted") == 2
+        finals[label] = (incremental_rows, _rows_of(tgt, spark))
+        states[label] = store.get(name)
+    assert finals["plain"] == finals["bucketed"] == finals["manifest"]
+    assert states["plain"] == states["bucketed"] == states["manifest"]
+    assert finals["plain"][1] == sorted((r[0], r[2], r[5]) for r in standard_rows)
 
 
 def test_bucketed_merge_crash_before_swap_leaves_old_version(env, tmp_path, monkeypatch):
