@@ -6,6 +6,9 @@ onto DataFrame ops + an atomic-rewrite sink:
 * control scan + change-volume evaluation  -> scans.control_scan + counts
 * cost-based mode selection (R5/T2)        -> NO_CHANGE / INCREMENTAL /
   TRUNCATE / STANDARD, threshold 40% (AppConfiguration.cs:39)
+* perfect-sync fast path (R6)              -> one shuffle-free aggregate;
+  its target half is memoized in StateStore per live version directory,
+  so a no-change cycle on a known version reads only the source
 * 3-step delete + selective insert (T3)    -> one sink call,
   target.merge(upserts, doomed_keys): every sink deletes the doomed and
   upserted keys, inserts the upserts and publishes atomically; only which
@@ -30,7 +33,7 @@ HashSets, CopyOrchestrator.cs:1018-1022).
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +82,43 @@ class SyncReport:
     excess_percent: float = 0.0
     duration_sec: float = 0.0
     classification: dict[str, int] = field(default_factory=dict)
+    #: target half of the R6 no-change probe: "witness" (taken from the
+    #: state's stored witness, the target was not opened), "scan" (the
+    #: target was read), "" when no probe ran (STANDARD, forced
+    #: TRUNCATE, merge_upsert)
+    probe: str = ""
+
+
+def _witness_of(row, path: str) -> dict:
+    """The target half of a two-sided R6 probe row, stored as the
+    witness of the version directory at ``path``. The key-hash sums are
+    kept as exact ints (the probe sums them as DECIMAL(38))."""
+
+    def exact(v):
+        return None if v is None else int(v)
+
+    return {
+        "path": path,
+        "rows": row["tgt_total"],
+        "sum1": exact(row["t_sum1"]),
+        "sum2": exact(row["t_sum2"]),
+        "max_ver": exact(row["t_max_ver"]),
+    }
+
+
+def _witnessed_target(state: TableState, path: str | None) -> dict | None:
+    """The target half of the R6 probe as the stored witness certifies
+    it, or None when the probe must scan the target. The witness holds
+    only for the version it was learned on — a published version
+    directory never changes, and every publish stages a fresh one — and
+    only while no witnessed row sits above ``tgt_ts``, which is exactly
+    ``tgt_changed == 0``."""
+    w = state.witness
+    if w is None or w["path"] != path:
+        return None
+    if w["max_ver"] is not None and (state.tgt_ts is None or w["max_ver"] > state.tgt_ts):
+        return None
+    return {"tgt_total": w["rows"], "tgt_changed": 0, "t_sum1": w["sum1"], "t_sum2": w["sum2"]}
 
 
 class SyncEngine:
@@ -158,19 +198,23 @@ class SyncEngine:
         cfg = self.config
         key, ver = cfg.key, cfg.version
         fetched = fetcher.full().cache()
-        row = fetched.agg(
-            F.max(key).alias("max_key"),
-            F.max(ver).alias("max_ver") if ver in source.columns else F.lit(None).alias("max_ver"),
-        ).first()
-        report = SyncReport(table=name, mode=TRUNCATE)
-        report.inserted = self._overwrite_and_commit(
-            name,
-            self._widen_for_refresh(fetched, target, evolve_schema),
-            target,
-            row["max_key"],
-            row["max_ver"],
-        )
-        fetched.unpersist()
+        try:
+            row = fetched.agg(
+                F.max(key).alias("max_key"),
+                F.max(ver).alias("max_ver")
+                if ver in source.columns
+                else F.lit(None).alias("max_ver"),
+            ).first()
+            report = SyncReport(table=name, mode=TRUNCATE)
+            report.inserted = self._overwrite_and_commit(
+                name,
+                self._widen_for_refresh(fetched, target, evolve_schema),
+                target,
+                row["max_key"],
+                row["max_ver"],
+            )
+        finally:
+            fetched.unpersist()
         return report
 
     #: optional tombstone marker column in CDC batches: rows where it is
@@ -201,50 +245,52 @@ class SyncEngine:
             F.coalesce(F.col(tomb), F.lit(False)) if tomb in batch.columns else F.lit(False)
         )
         batch = self._compact_last_event(batch).cache()
-        # one agg job covers live count, tombstone count, watermark
-        # maxima AND the changed keys' bucket set, so merge() below
-        # skips its own distinct+collect job (r15: one Spark job per
-        # micro-batch instead of two on the CDC path)
-        row = batch.agg(
-            F.count(F.when(~is_tomb, 1)).alias("n"),
-            F.count(F.when(is_tomb, 1)).alias("n_dead"),
-            F.max(F.when(~is_tomb, F.col(key))).alias("max_key"),
-            F.max(F.when(~is_tomb, F.col(ver))).alias("max_ver")
-            if ver in batch.columns
-            else F.lit(None).alias("max_ver"),
-            F.collect_set(target._bucket_of(F.col(key))).alias("aff"),
-        ).first()
-        n_dead = row["n_dead"]
-        report = SyncReport(table=name, mode=INCREMENTAL, inserted=row["n"], deleted=n_dead)
-        if row["n"] == 0 and n_dead == 0:
-            report.mode = NO_CHANGE
-        else:
-            consumed = [c for c in (tomb, self.config.sequence_col) if c]
-            upserts = batch.filter(~is_tomb).drop(*consumed)
-            tombstoned = batch.filter(is_tomb).select(key)
-            # retry on optimistic-concurrency conflict: merge() re-reads
-            # the live version on every call, so a retry re-derives the
-            # carried references from the interloper's commit — the
-            # standard OCC loop. The merge itself is idempotent on the
-            # same batch (T5), so a retry after a conflicting publish is
-            # semantically a fresh merge of the same delta. Bounded: a
-            # writer that keeps losing the race after 3 attempts gives
-            # up loudly rather than spinning against a hot table.
-            for attempt in range(3):
-                try:
-                    target.merge(
-                        self.spark,
-                        upserts,
-                        tombstoned,
-                        evolve_schema=evolve_schema,
-                        affected_buckets=sorted(row["aff"] or []),
-                    )
-                    break
-                except ConcurrentWriteError:
-                    if attempt == 2:
-                        raise
-            self._commit_state(name, row["max_key"], row["max_ver"])
-        batch.unpersist()
+        try:
+            # one agg job covers live count, tombstone count, watermark
+            # maxima AND the changed keys' bucket set, so merge() below
+            # skips its own distinct+collect job (r15: one Spark job per
+            # micro-batch instead of two on the CDC path)
+            row = batch.agg(
+                F.count(F.when(~is_tomb, 1)).alias("n"),
+                F.count(F.when(is_tomb, 1)).alias("n_dead"),
+                F.max(F.when(~is_tomb, F.col(key))).alias("max_key"),
+                F.max(F.when(~is_tomb, F.col(ver))).alias("max_ver")
+                if ver in batch.columns
+                else F.lit(None).alias("max_ver"),
+                F.collect_set(target._bucket_of(F.col(key))).alias("aff"),
+            ).first()
+            n_dead = row["n_dead"]
+            report = SyncReport(table=name, mode=INCREMENTAL, inserted=row["n"], deleted=n_dead)
+            if row["n"] == 0 and n_dead == 0:
+                report.mode = NO_CHANGE
+            else:
+                consumed = [c for c in (tomb, self.config.sequence_col) if c]
+                upserts = batch.filter(~is_tomb).drop(*consumed)
+                tombstoned = batch.filter(is_tomb).select(key)
+                # retry on optimistic-concurrency conflict: merge() re-reads
+                # the live version on every call, so a retry re-derives the
+                # carried references from the interloper's commit — the
+                # standard OCC loop. The merge itself is idempotent on the
+                # same batch (T5), so a retry after a conflicting publish is
+                # semantically a fresh merge of the same delta. Bounded: a
+                # writer that keeps losing the race after 3 attempts gives
+                # up loudly rather than spinning against a hot table.
+                for attempt in range(3):
+                    try:
+                        target.merge(
+                            self.spark,
+                            upserts,
+                            tombstoned,
+                            evolve_schema=evolve_schema,
+                            affected_buckets=sorted(row["aff"] or []),
+                        )
+                        break
+                    except ConcurrentWriteError:
+                        if attempt == 2:
+                            raise
+                self._commit_state(name, row["max_key"], row["max_ver"])
+        finally:
+            batch.unpersist()
         report.duration_sec = time.time() - t0
         return report
 
@@ -317,12 +363,24 @@ class SyncEngine:
         # exactly once, so materializing a cache there is pure overhead;
         # the incremental branch caches before its multi-join reuse.
         control = fetcher.control().select(key, ver)
-        tgt_df = target.read(self.spark)
 
-        # R6 probe: counts + dual key checksums, ZERO shuffle (the
-        # common resync cycle is "nothing changed" — it must cost two
-        # pruned scans with partial aggs, never an exchange)
-        row = self._fastpath_metrics(control, tgt_df, state).first()
+        # R6 probe: counts + dual key checksums, ZERO shuffle. Its source
+        # half runs every cycle; its target half is memoized per live
+        # version directory, which no publish ever modifies. When the
+        # stored witness names the live version, a no-change cycle is
+        # ONE source-only aggregate and never opens the target; else
+        # both sides are scanned, and a cycle that ends NO_CHANGE stores
+        # the target half it scanned.
+        live = target.current_path()
+        known = _witnessed_target(state, live)
+        tgt_df = None
+        if known is not None:
+            probe = "witness"
+            row = {**self._fastpath_metrics(control, None, state).first().asDict(), **known}
+        else:
+            probe = "scan"
+            tgt_df = target.read(self.spark)
+            row = self._fastpath_metrics(control, tgt_df, state).first().asDict()
         control_rows, src_changed = row["control_rows"], row["src_changed"]
         min_key, max_key, max_ver = row["min_key"], row["max_key"], row["max_ver"]
         tgt_total, tgt_changed = row["tgt_total"], row["tgt_changed"]
@@ -339,9 +397,9 @@ class SyncEngine:
             and row["c_sum1"] == row["t_sum1"]
             and row["c_sum2"] == row["t_sum2"]
         ):
-            return SyncReport(
-                table=name, mode=NO_CHANGE, src_changed=0, tgt_changed=0, missing=0
-            )
+            if probe == "scan":
+                self._learn_witness(name, state, _witness_of(row, live))
+            return SyncReport(table=name, mode=NO_CHANGE, probe=probe)
 
         metrics = delta.change_metrics(src_changed, tgt_changed, control_rows, tgt_total)
         report = SyncReport(
@@ -351,6 +409,7 @@ class SyncEngine:
             tgt_changed=tgt_changed,
             change_percent=metrics["change_percent"],
             excess_percent=metrics["excess_percent"],
+            probe=probe,
         )
 
         # R5/T2: cost-based fallback to full refresh
@@ -378,54 +437,61 @@ class SyncEngine:
         # reference's 15x headline is about) never reaches this shuffle.
         # Cache control now: the pairing pass + changed_keys + merge
         # joins all re-read it.
+        if tgt_df is None:
+            tgt_df = target.read(self.spark)
         control = control.cache()
-        row = self._premerge_metrics(control, tgt_df, state).first()
-        missing, survivors_cnt = row["missing"], row["survivors"]
-        report.missing = missing
+        try:
+            row = self._premerge_metrics(control, tgt_df, state).first()
+            missing, survivors_cnt = row["missing"], row["survivors"]
+            report.missing = missing
 
-        # T4: late-data widening — rows older than the watermark but absent
-        # from the target must still be recovered (CopyOrchestrator.cs:1106-1123)
-        fetch_ts = state.src_ts
-        if row["min_missing_ver"] is not None:
-            fetch_ts = min(fetch_ts, row["min_missing_ver"])
-        elif row["missing"]:
-            # missing rows exist but ALL carry a NULL version: F.min skipped
-            # them, and `version >= ts` is null-rejecting — without a floor
-            # they are re-reported missing every cycle without converging.
-            # The reference substitutes an all-zeros timestamp here
-            # (CopyOrchestrator.cs:1115-1118); watermark_scan additionally
-            # admits NULL versions when the threshold is <= 0.
-            fetch_ts = 0
-        fetch_floor = min_key if row["min_missing_key"] is None else min(
-            min_key, row["min_missing_key"]
-        )
+            # T4: late-data widening — rows older than the watermark but
+            # absent from the target must still be recovered
+            # (CopyOrchestrator.cs:1106-1123)
+            fetch_ts = state.src_ts
+            if row["min_missing_ver"] is not None:
+                fetch_ts = min(fetch_ts, row["min_missing_ver"])
+            elif row["missing"]:
+                # missing rows exist but ALL carry a NULL version: F.min
+                # skipped them, and `version >= ts` is null-rejecting —
+                # without a floor they are re-reported missing every cycle
+                # without converging. The reference substitutes an
+                # all-zeros timestamp here (CopyOrchestrator.cs:1115-1118);
+                # watermark_scan additionally admits NULL versions when
+                # the threshold is <= 0.
+                fetch_ts = 0
+            fetch_floor = min_key if row["min_missing_key"] is None else min(
+                min_key, row["min_missing_key"]
+            )
 
-        # S7: watermark-filtered incremental fetch (strategy-aware: the
-        # template's @sysRowVersionFilter slot becomes this predicate)
-        fetched = fetcher.incremental(fetch_ts, fetch_floor)
+            # S7: watermark-filtered incremental fetch (strategy-aware: the
+            # template's @sysRowVersionFilter slot becomes this predicate)
+            fetched = fetcher.incremental(fetch_ts, fetch_floor)
 
-        # T3: three-step merge. doomed = excess (J5 complement) ∪
-        # modified (J4); fetched rows replace-or-insert (T5: a replayed
-        # row replaces its own copy). The sink rewrites only what its
-        # layout needs to.
-        changed_keys = control.filter(F.col(ver) > F.lit(state.tgt_ts)).select(key)
-        excess = tgt_df.join(control.select(key), on=key, how="left_anti").select(key)
-        target.merge(
-            self.spark,
-            fetched,
-            excess.unionByName(changed_keys),
-            evolve_schema=evolve_schema,
-        )
-        self._commit_state(name, max_key, max_ver)
-        # accounting from the fused agg + the written footers: zero extra
-        # jobs (previously a full recomputation of inserts + survivors)
-        report.deleted = max(0, tgt_total - survivors_cnt)
-        report.inserted = max(0, target.num_rows() - survivors_cnt)
-        control.unpersist()
+            # T3: three-step merge. doomed = excess (J5 complement) ∪
+            # modified (J4); fetched rows replace-or-insert (T5: a
+            # replayed row replaces its own copy). The sink rewrites only
+            # what its layout needs to.
+            changed_keys = control.filter(F.col(ver) > F.lit(state.tgt_ts)).select(key)
+            excess = tgt_df.join(control.select(key), on=key, how="left_anti").select(key)
+            target.merge(
+                self.spark,
+                fetched,
+                excess.unionByName(changed_keys),
+                evolve_schema=evolve_schema,
+            )
+            self._commit_state(name, max_key, max_ver)
+            # accounting from the fused agg + the written footers: zero
+            # extra jobs (previously a full recomputation of inserts +
+            # survivors)
+            report.deleted = max(0, tgt_total - survivors_cnt)
+            report.inserted = max(0, target.num_rows() - survivors_cnt)
+        finally:
+            control.unpersist()
         return report
 
     def _fastpath_metrics(
-        self, control: DataFrame, tgt_df: DataFrame, state: TableState
+        self, control: DataFrame, tgt_df: DataFrame | None, state: TableState
     ) -> DataFrame:
         """The R6 no-change probe: A6/A7 counts, window bounds, and a
         key-SET equality witness, all in ONE map-only aggregation over
@@ -435,24 +501,38 @@ class SyncEngine:
         so equal counts + equal exact sums of two independent 64-bit key
         hashes (xxhash64 with distinct salts, summed as DECIMAL(38) so
         no overflow wraps) certify control-keys == target-keys with
-        collision odds ~2^-128 for non-adversarial keys. This is what
-        lets the no-change resync cycle — the reference's 15x headline
-        (TESTING_GUIDE.md:331-333) — cost two column-pruned scans and
-        nothing else at ANY scale; the per-key pairing pass
-        (_premerge_metrics) runs only once something actually changed."""
+        collision odds ~2^-128 for non-adversarial keys. The per-key
+        pairing pass (_premerge_metrics) runs only once something
+        actually changed.
+
+        ``tgt_df=None`` aggregates the control window alone (the
+        ``control_rows``, ``src_changed``, ``min_key``, ``max_key``,
+        ``max_ver`` and ``c_sum*`` columns). That is the whole cost of a
+        no-change resync on a target version whose witness the state
+        already holds — the reference's 15x headline
+        (TESTING_GUIDE.md:331-333): one column-pruned scan of the
+        source and nothing else at ANY scale. With a target frame the
+        row adds its half: ``tgt_total``, ``tgt_changed``, ``t_sum*``
+        and ``t_max_ver``, the fields a witness stores."""
         key = self.config.key
         ver = self.config.version
-        c = control.select(
+        tagged = control.select(
             F.col(key), F.col(ver).alias("__v"), F.lit(1).alias("__c"), F.lit(0).alias("__t")
         )
-        t = tgt_df.select(
-            F.col(key), F.col(ver).alias("__v"), F.lit(0).alias("__c"), F.lit(1).alias("__t")
-        )
+        if tgt_df is not None:
+            tagged = tagged.unionByName(
+                tgt_df.select(
+                    F.col(key),
+                    F.col(ver).alias("__v"),
+                    F.lit(0).alias("__c"),
+                    F.lit(1).alias("__t"),
+                )
+            )
         on_ctl = F.col("__c") == 1
         on_tgt = F.col("__t") == 1
         h1 = F.xxhash64(F.col(key)).cast("decimal(38,0)")
         h2 = F.xxhash64(F.col(key), F.lit(0x5EED)).cast("decimal(38,0)")
-        return c.unionByName(t).agg(
+        source_half = [
             F.count(F.when(on_ctl, 1)).alias("control_rows"),
             F.count(F.when(on_ctl & (F.col("__v") > F.lit(state.src_ts)), 1)).alias(
                 "src_changed"
@@ -460,15 +540,31 @@ class SyncEngine:
             F.min(F.when(on_ctl, F.col(key))).alias("min_key"),
             F.max(F.when(on_ctl, F.col(key))).alias("max_key"),
             F.max(F.when(on_ctl, F.col("__v"))).alias("max_ver"),
+            F.sum(F.when(on_ctl, h1)).alias("c_sum1"),
+            F.sum(F.when(on_ctl, h2)).alias("c_sum2"),
+        ]
+        target_half = [
             F.count(F.when(on_tgt, 1)).alias("tgt_total"),
             F.count(F.when(on_tgt & (F.col("__v") > F.lit(state.tgt_ts)), 1)).alias(
                 "tgt_changed"
             ),
-            F.sum(F.when(on_ctl, h1)).alias("c_sum1"),
             F.sum(F.when(on_tgt, h1)).alias("t_sum1"),
-            F.sum(F.when(on_ctl, h2)).alias("c_sum2"),
             F.sum(F.when(on_tgt, h2)).alias("t_sum2"),
-        )
+            F.max(F.when(on_tgt, F.col("__v"))).alias("t_max_ver"),
+        ]
+        return tagged.agg(*source_half, *(target_half if tgt_df is not None else []))
+
+    def _learn_witness(self, name: str, probed: TableState, witness: dict) -> None:
+        """Store the target half a scan probe found in sync, under the
+        store lock and only while the stored watermarks are still the
+        ones the probe used: a cycle that committed in between keeps its
+        state. Never moves a watermark."""
+
+        def _merge(prev: TableState, learned: TableState) -> TableState:
+            same = replace(prev, witness=None) == replace(learned, witness=None)
+            return learned if same else prev
+
+        self.store.merge_commit(name, replace(probed, witness=witness), _merge)
 
     def _premerge_metrics(
         self, control: DataFrame, tgt_df: DataFrame, state: TableState
@@ -543,56 +639,66 @@ class SyncEngine:
         key, ver = cfg.key, cfg.version
 
         fetched = fetcher.full().cache()
-        row = fetched.agg(
-            F.min(key).alias("min_key"), F.max(key).alias("max_key"),
-            F.max(ver).alias("max_ver") if ver in source.columns else F.lit(None).alias("max_ver"),
-        ).first()
-        min_key, max_key, max_ver = row["min_key"], row["max_key"], row["max_ver"]
+        classified = None
+        try:
+            row = fetched.agg(
+                F.min(key).alias("min_key"), F.max(key).alias("max_key"),
+                F.max(ver).alias("max_ver")
+                if ver in source.columns
+                else F.lit(None).alias("max_ver"),
+            ).first()
+            min_key, max_key, max_ver = row["min_key"], row["max_key"], row["max_ver"]
 
-        if not target.exists() or min_key is None:
-            report = SyncReport(table=name, mode=STANDARD)
-            report.inserted = self._overwrite_and_commit(name, fetched, target, max_key, max_ver)
-            fetched.unpersist()
+            if not target.exists() or min_key is None:
+                report = SyncReport(table=name, mode=STANDARD)
+                report.inserted = self._overwrite_and_commit(
+                    name, fetched, target, max_key, max_ver
+                )
+                return report
+
+            tgt_df = target.read(self.spark)
+            # J1 scoped to keys >= min fetched key (GetAxDbVersionMapAsync's
+            # WHERE RecId >= @MinRecId, AxDbDataService.cs:737)
+            tgt_window = tgt_df.filter(F.col(key) >= F.lit(min_key))
+            state = self.store.get(name)
+            # the engine's version column (cfg.version, default
+            # SysRowVersion) must drive the comparison: with the default
+            # D365 names the context would report has_recversion=False and
+            # classification silently degrades to key-only — modified
+            # rows never re-sync
+            classified = delta.classify_changes(
+                fetched,
+                tgt_window,
+                key=key,
+                max_transferred_key=state.max_transferred_key,
+                recversion=self.config.version,
+            ).cache()
+            counts = {
+                r["change_type"]: r["cnt"] for r in delta.change_counts(classified).collect()
+            }
+
+            incoming_keys = classified.filter(
+                F.col("change_type").isin(delta.MODIFIED, delta.NEW)
+            ).select(key)
+            deleted_keys = classified.filter(F.col("change_type") == delta.DELETED).select(key)
+
+            report = SyncReport(table=name, mode=STANDARD, classification=counts)
+            report.inserted = counts.get(delta.MODIFIED, 0) + counts.get(delta.NEW, 0)
+            report.deleted = counts.get(delta.MODIFIED, 0) + counts.get(delta.DELETED, 0)
+            target.merge(
+                self.spark,
+                fetched.join(incoming_keys, on=key, how="left_semi"),
+                deleted_keys,
+                evolve_schema=evolve_schema,
+            )
+            # full-window fetch: the fetched maxima ARE the source's
+            # truth, so overwrite (a restore-lowered rowversion must stick)
+            self._commit_state(name, max_key, max_ver, overwrite=True)
             return report
-
-        tgt_df = target.read(self.spark)
-        # J1 scoped to keys >= min fetched key (GetAxDbVersionMapAsync's
-        # WHERE RecId >= @MinRecId, AxDbDataService.cs:737)
-        tgt_window = tgt_df.filter(F.col(key) >= F.lit(min_key))
-        state = self.store.get(name)
-        # the engine's version column (cfg.version, default SysRowVersion)
-        # must drive the comparison: with the default D365 names the
-        # context would report has_recversion=False and classification
-        # silently degrades to key-only — modified rows never re-sync
-        classified = delta.classify_changes(
-            fetched,
-            tgt_window,
-            key=key,
-            max_transferred_key=state.max_transferred_key,
-            recversion=self.config.version,
-        ).cache()
-        counts = {r["change_type"]: r["cnt"] for r in delta.change_counts(classified).collect()}
-
-        incoming_keys = classified.filter(
-            F.col("change_type").isin(delta.MODIFIED, delta.NEW)
-        ).select(key)
-        deleted_keys = classified.filter(F.col("change_type") == delta.DELETED).select(key)
-
-        report = SyncReport(table=name, mode=STANDARD, classification=counts)
-        report.inserted = counts.get(delta.MODIFIED, 0) + counts.get(delta.NEW, 0)
-        report.deleted = counts.get(delta.MODIFIED, 0) + counts.get(delta.DELETED, 0)
-        target.merge(
-            self.spark,
-            fetched.join(incoming_keys, on=key, how="left_semi"),
-            deleted_keys,
-            evolve_schema=evolve_schema,
-        )
-        # full-window fetch: the fetched maxima ARE the source's truth,
-        # so overwrite (a restore-lowered rowversion must stick)
-        self._commit_state(name, max_key, max_ver, overwrite=True)
-        classified.unpersist()
-        fetched.unpersist()
-        return report
+        finally:
+            if classified is not None:
+                classified.unpersist()
+            fetched.unpersist()
 
     # -- commit machinery -----------------------------------------------------
 

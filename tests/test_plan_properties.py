@@ -200,6 +200,16 @@ def test_noop_fastpath_probe_zero_shuffle(spark):
     assert row["control_rows"] == row["tgt_total"]
     assert row["src_changed"] == 0 and row["tgt_changed"] == 0
     assert row["c_sum1"] == row["t_sum1"] and row["c_sum2"] == row["t_sum2"]
+    # the source half alone (the probe of a witnessed target version)
+    src_only = engine._fastpath_metrics(src, None, TableState(src_ts=10**12, tgt_ts=10**12))
+    ops = physical_operators(src_only)
+    assert not [o for o in ops if "Join" in o], ops
+    assert ops.count("Exchange") <= 1, ops
+    half = src_only.first()
+    assert "tgt_total" not in half.asDict()
+    assert (half["control_rows"], half["c_sum1"], half["c_sum2"]) == (
+        row["control_rows"], row["c_sum1"], row["c_sum2"]
+    )
 
 
 def test_noop_fastpath_checksum_catches_swapped_keys(spark):

@@ -175,6 +175,39 @@ def test_watermark_never_advances_on_failure(env, monkeypatch):
     assert st_after == st_before  # crash-safety contract (T1/T6)
 
 
+@pytest.mark.fast
+@pytest.mark.parametrize(
+    "path", ["first_sync", "truncate", "incremental", "standard", "merge_upsert"]
+)
+def test_failed_write_leaves_no_cached_frames(env, monkeypatch, path):
+    # every cycle unpersists the frames it cached even when the sink
+    # raises: the orchestrator contains the failure per table and
+    # retry_failed runs again, so a leak would pile up in executor
+    # storage
+    spark, store, engine, target = env
+    rows = make_rows(40)
+    if path != "first_sync":
+        engine.sync_table("T1", df_of(spark, rows), target)
+    if path == "standard":
+        store.clear("T1")
+    spark.catalog.clearCache()
+
+    def boom(*_a, **_k):
+        raise RuntimeError("disk full")
+
+    monkeypatch.setattr(target, "overwrite", boom)
+    monkeypatch.setattr(target, "merge", boom)
+    changed = [(r[0], r[1] + 1, r[2] + 500, r[3], r[4], r[5]) if r[0] == 1030 else r for r in rows]
+    with pytest.raises(RuntimeError, match="disk full"):
+        if path == "merge_upsert":
+            engine.merge_upsert("T1", df_of(spark, changed[:5]), target)
+        else:
+            engine.sync_table(
+                "T1", df_of(spark, changed), target, force_truncate=path == "truncate"
+            )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_fallback_no_rowversion_column(env):
     spark, store, engine, target = env
     # no SysRowVersion column -> engine stays on the standard path with
@@ -732,13 +765,20 @@ def test_fastpath_decision_matches_logical_condition(env):
     """Property: the checksum-based no-change decision must equal the
     logical condition (no row above either watermark AND identical key
     sets) on adversarial shapes — equal counts with swapped keys,
-    supersets, empty sides, boundary watermarks. Spark-job-per-case, so
-    the cases are enumerated rather than hypothesis-driven."""
+    supersets, empty sides, boundary watermarks — whether the probe
+    scans the target or takes its half from a witness learned on that
+    target. Spark-job-per-case, so the cases are enumerated rather than
+    hypothesis-driven."""
+    from dataclasses import replace
+
+    from d365fo_db_sync_spark.sync import _witness_of, _witnessed_target
+
     spark, store, engine, target = env
 
     ts = 100
+    state = TableState(src_ts=ts, tgt_ts=ts)
 
-    def decide(ctl: dict, tgt: dict) -> bool:
+    def decide(ctl: dict, tgt: dict, probe: str) -> bool:
         c = spark.createDataFrame(
             [(k, v) for k, v in ctl.items()] or [(None, None)],
             "RecId long, SysRowVersion long",
@@ -747,7 +787,17 @@ def test_fastpath_decision_matches_logical_condition(env):
             [(k, v) for k, v in tgt.items()] or [(None, None)],
             "RecId long, SysRowVersion long",
         ).filter("RecId IS NOT NULL")
-        row = engine._fastpath_metrics(c, t, TableState(src_ts=ts, tgt_ts=ts)).first()
+        row = engine._fastpath_metrics(c, t, state).first().asDict()
+        if probe == "witness":
+            # learn the witness from tgt, then decide as the engine does:
+            # source-only probe plus the witnessed half, or a scan when
+            # the witness does not certify tgt_changed == 0
+            learned = replace(state, witness=_witness_of(row, "v_live"))
+            known = _witnessed_target(learned, "v_live")
+            assert (known is None) == any(v is not None and v > ts for v in tgt.values())
+            assert _witnessed_target(learned, "v_other") is None
+            if known is not None:
+                row = {**engine._fastpath_metrics(c, None, learned).first().asDict(), **known}
         return (
             row["src_changed"] == 0
             and row["tgt_changed"] == 0
@@ -778,4 +828,5 @@ def test_fastpath_decision_matches_logical_condition(env):
         ({1: None, 2: 50}, {1: 50, 2: None}),      # NULLs crossed, same keys
     ]
     for ctl, tgt in cases:
-        assert decide(ctl, tgt) == logical(ctl, tgt), (ctl, tgt)
+        for probe in ("scan", "witness"):
+            assert decide(ctl, tgt, probe) == logical(ctl, tgt), (ctl, tgt, probe)
