@@ -1,17 +1,25 @@
-"""Delta comparison — the engine's semantic heart (reference family J1-J6).
+"""Delta comparison rules (reference family J1-J6).
 
 The reference classifies every key into {new, modified, unchanged, deleted}
 by building a driver-side hash map of the target's version columns and
-probing it with each source row (AxDbDataService.cs:717-867). At 100 TB
-that hash map cannot exist; the Spark-native formulation is ONE full-outer
-join on the key with the classification as a column expression:
+probing it with each source row (CompareRecords,
+AxDbDataService.cs:717-867). This module writes those rules ONCE, as
+Column expressions over a paired frame whose columns carry a side prefix
+(``s_*`` source, ``t_*`` target):
 
-* both sides shuffle-partition on the key (sort-merge join at scale, AQE
-  picks broadcast when a side is small, and splits skewed partitions);
-* null-safe equality (``eqNullSafe``) reproduces the reference's
-  DBNull semantics exactly (ValuesEqual, AxDbDataService.cs:872-886);
-* the RECVERSION=1 fallback rule (AxDbDataService.cs:801-814) becomes a
+* :func:`side_columns` projects one side onto its prefixed key and the
+  version columns both sides have (:class:`ComparisonContext`);
+* :func:`change_type` is the classification: null-safe equality
+  (``eqNullSafe``) on the datetime columns reproduces the reference's
+  DBNull semantics (ValuesEqual, AxDbDataService.cs:872-886), and the
+  RECVERSION=1 fallback rule (AxDbDataService.cs:801-814) is a
   predicate against the stored max-transferred key.
+
+Two pairings apply them. The sync engine pairs its rows with a tagged
+union and ONE groupBy on the key (sync.SyncEngine._pair_by_key).
+:func:`classify_changes` pairs them with a full-outer join; it serves
+the ``delta_classify_*`` gate queries, the operator suite, and the tests
+that check both pairings against one oracle.
 
 Nothing here collects to the driver — every output is a DataFrame.
 """
@@ -28,6 +36,7 @@ NEW = "new"
 MODIFIED = "modified"
 UNCHANGED = "unchanged"
 DELETED = "deleted"
+CHANGE_TYPES = (NEW, MODIFIED, UNCHANGED, DELETED)
 
 
 @dataclass(frozen=True)
@@ -55,7 +64,7 @@ class ComparisonContext:
     ) -> "ComparisonContext":
         """Presence test honors the caller's column NAMES — a custom
         version column (e.g. SysRowVersion) must make has_recversion
-        true, or classify_changes would silently degrade to key-only
+        true, or the classification would silently degrade to key-only
         comparison and report every surviving key unchanged."""
         s = {c.upper() for c in src_cols}
         t = {c.upper() for c in tgt_cols}
@@ -67,23 +76,35 @@ class ComparisonContext:
         )
 
 
-def classify_changes(
-    src: DataFrame,
-    tgt: DataFrame,
+def side_columns(
+    tag: str,
+    context: ComparisonContext,
     key: str = "RecId",
-    context: ComparisonContext | None = None,
-    max_transferred_key: int | None = None,
     recversion: str = "RECVERSION",
     created: str = "CREATEDDATETIME",
     modified: str = "MODIFIEDDATETIME",
-    compact_duplicates: bool = False,
-    salt: int = 16,
-) -> DataFrame:
-    """Full-outer join + 4-way classification (J1).
+) -> list[Column]:
+    """One side's columns as :func:`change_type` reads them: the key as
+    ``{tag}_{key}``, then ``{tag}_rv``, ``{tag}_cd`` and ``{tag}_md``
+    for each version column the context finds on both sides."""
+    cols = [F.col(key).alias(f"{tag}_{key}")]
+    if context.has_recversion:
+        cols.append(F.col(recversion).alias(f"{tag}_rv"))
+    if context.has_created:
+        cols.append(F.col(created).alias(f"{tag}_cd"))
+    if context.has_modified:
+        cols.append(F.col(modified).alias(f"{tag}_md"))
+    return cols
 
-    Returns one row per key seen on either side with columns
-    ``(key, change_type)``. Semantics mirror CompareRecords
-    (AxDbDataService.cs:765-867):
+
+def change_type(
+    context: ComparisonContext,
+    key: str = "RecId",
+    max_transferred_key: int | None = None,
+) -> Column:
+    """CompareRecords (AxDbDataService.cs:765-867) over a paired frame
+    of :func:`side_columns` (a NULL ``s_{key}``/``t_{key}`` means the
+    key is absent from that side):
 
     * key only in source -> ``new``
     * key only in target -> ``deleted``
@@ -91,46 +112,7 @@ def classify_changes(
       ``unchanged`` iff target RECVERSION == 1 and key <= stored
       max-transferred key, else ``modified``
     * otherwise: ``unchanged`` iff RECVERSION equal and every available
-      datetime column null-safe-equal, else ``modified``.
-
-    Skew: with unique keys per side (the reference's invariant) the
-    hash shuffle spreads keys uniformly and AQE splits any residual
-    partition skew — no salting needed or useful. The skew vector that
-    CAN kill this join is a source carrying MANY duplicate rows for a
-    hot key (an uncompacted CDC replay feed): the full-outer join
-    funnels every duplicate into the hot key's one task.
-    ``compact_duplicates=True`` removes it before the join with a
-    two-stage salted reduction (operators/skew.py): stage 1 reduces on
-    (key, salt) so the hot key spreads over ``salt`` reducers, stage 2
-    merges the partials per key. Element-wise max is the correct merge
-    for replayed/monotone version columns — the latest version wins.
-    """
-    context = context or ComparisonContext.from_columns(
-        src.columns, tgt.columns, recversion=recversion, created=created, modified=modified
-    )
-
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        cols = [F.col(key).alias(f"{tag}_{key}")]
-        if context.has_recversion:
-            cols.append(F.col(recversion).alias(f"{tag}_rv"))
-        if context.has_created:
-            cols.append(F.col(created).alias(f"{tag}_cd"))
-        if context.has_modified:
-            cols.append(F.col(modified).alias(f"{tag}_md"))
-        return df.select(*cols)
-
-    s = side(src, "s")
-    t = side(tgt, "t")
-    if compact_duplicates:
-        from d365fo_db_sync_spark.operators.skew import salted_agg
-
-        value_cols = [c for c in s.columns if c != f"s_{key}"]
-        if value_cols:
-            s = salted_agg(s, [f"s_{key}"], {c: (c, "max") for c in value_cols}, salt=salt)
-        else:
-            s = s.distinct()
-    joined = s.join(t, s[f"s_{key}"] == t[f"t_{key}"], "full_outer")
-
+      datetime column null-safe-equal, else ``modified``."""
     equal: Column = F.lit(True)
     if context.has_recversion:
         equal = equal & (F.col("s_rv") == F.col("t_rv"))
@@ -152,11 +134,57 @@ def classify_changes(
             F.col("s_rv") == 1,
             F.when(fallback_unchanged, F.lit(UNCHANGED)).otherwise(F.lit(MODIFIED)),
         )
-    change = change.when(equal, F.lit(UNCHANGED)).otherwise(F.lit(MODIFIED))
+    return change.when(equal, F.lit(UNCHANGED)).otherwise(F.lit(MODIFIED))
 
+
+def classify_changes(
+    src: DataFrame,
+    tgt: DataFrame,
+    key: str = "RecId",
+    context: ComparisonContext | None = None,
+    max_transferred_key: int | None = None,
+    recversion: str = "RECVERSION",
+    created: str = "CREATEDDATETIME",
+    modified: str = "MODIFIEDDATETIME",
+    compact_duplicates: bool = False,
+    salt: int = 16,
+) -> DataFrame:
+    """Full-outer join + 4-way classification (J1).
+
+    Returns one row per key seen on either side with columns
+    ``(key, change_type)``, classified by :func:`change_type`. Both
+    sides shuffle-partition on the key (sort-merge join at scale).
+
+    Skew: with unique keys per side (the reference's invariant) the
+    hash shuffle spreads keys uniformly and AQE splits any residual
+    partition skew — no salting needed or useful. The skew vector that
+    CAN kill this join is a source carrying MANY duplicate rows for a
+    hot key (an uncompacted CDC replay feed): the full-outer join
+    funnels every duplicate into the hot key's one task.
+    ``compact_duplicates=True`` removes it before the join with a
+    two-stage salted reduction (operators/skew.py): stage 1 reduces on
+    (key, salt) so the hot key spreads over ``salt`` reducers, stage 2
+    merges the partials per key. Element-wise max is the correct merge
+    for replayed/monotone version columns — the latest version wins.
+    """
+    context = context or ComparisonContext.from_columns(
+        src.columns, tgt.columns, recversion=recversion, created=created, modified=modified
+    )
+    names = dict(key=key, recversion=recversion, created=created, modified=modified)
+    s = src.select(*side_columns("s", context, **names))
+    t = tgt.select(*side_columns("t", context, **names))
+    if compact_duplicates:
+        from d365fo_db_sync_spark.operators.skew import salted_agg
+
+        value_cols = [c for c in s.columns if c != f"s_{key}"]
+        if value_cols:
+            s = salted_agg(s, [f"s_{key}"], {c: (c, "max") for c in value_cols}, salt=salt)
+        else:
+            s = s.distinct()
+    joined = s.join(t, s[f"s_{key}"] == t[f"t_{key}"], "full_outer")
     return joined.select(
         F.coalesce(F.col(f"s_{key}"), F.col(f"t_{key}")).alias(key),
-        change.alias("change_type"),
+        change_type(context, key, max_transferred_key).alias("change_type"),
     )
 
 

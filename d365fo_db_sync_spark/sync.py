@@ -13,6 +13,10 @@ onto DataFrame ops + an atomic-rewrite sink:
   target.merge(upserts, doomed_keys): every sink deletes the doomed and
   upserted keys, inserts the upserts and publishes atomically; only which
   files it rewrites depends on its layout (sinks.ParquetTarget)
+* state-loss compare (STANDARD)            -> the full window paired with
+  the WHOLE target by the same one-exchange groupBy as INCREMENTAL,
+  classified by delta.change_type (CompareRecords); target keys outside
+  the window are deleted, and a cycle that finds no change writes nothing
 * late-data widening (T4)                  -> fetch threshold =
   min(stored watermark, min version among keys missing from target)
   (CopyOrchestrator.cs:1106-1123)
@@ -50,6 +54,9 @@ NO_CHANGE = "NO_CHANGE"
 INCREMENTAL = "INCREMENTAL"
 TRUNCATE = "TRUNCATE"
 STANDARD = "STANDARD"
+
+#: the R6 probe and INCREMENTAL's pairing compare the version column only
+_BY_VERSION = delta.ComparisonContext(has_recversion=True, has_created=False, has_modified=False)
 
 
 @dataclass
@@ -141,8 +148,10 @@ class SyncEngine:
         evolve_schema: bool = False,
     ) -> SyncReport:
         """Make the last N source rows (by key) identical in the target —
-        the reference's core promise (README.md:9). Routes to the
-        optimized (watermark) path when state exists, else standard.
+        the reference's core promise (README.md:9). Routes to a
+        snapshot refresh when there is no target yet or the caller
+        forces one, to the optimized (watermark) path when state exists,
+        else to the standard (state-loss) compare.
 
         ``fetcher`` supplies the three physical fetch specializations
         (strategy.Fetcher); omitted, the default RecId top-N shapes are
@@ -168,54 +177,36 @@ class SyncEngine:
                 default_count=cfg.record_count,
             )
         state = self.store.get(name)
-        if force_truncate:
-            report = self._sync_truncate(
-                name, source, target, fetcher, evolve_schema=evolve_schema
+        if force_truncate or not target.exists():
+            report = self._refresh(
+                name, TRUNCATE if force_truncate else STANDARD, target, fetcher, evolve_schema
             )
-        elif (
-            cfg.version in source.columns
-            and state.src_ts is not None
-            and target.exists()
-        ):
+        elif cfg.version in source.columns and state.src_ts is not None:
             report = self._sync_optimized(
                 name, source, target, state, fetcher, evolve_schema=evolve_schema
             )
         else:
             report = self._sync_standard(
-                name, source, target, fetcher, evolve_schema=evolve_schema
+                name, target, state, fetcher, evolve_schema=evolve_schema
             )
         report.duration_sec = time.time() - t0
         return report
 
-    def _sync_truncate(
-        self,
-        name: str,
-        source: DataFrame,
-        target: ParquetTarget,
-        fetcher,
-        evolve_schema: bool = False,
+    def _refresh(
+        self, name: str, mode: str, target: ParquetTarget, fetcher, evolve_schema: bool
     ) -> SyncReport:
-        cfg = self.config
-        key, ver = cfg.key, cfg.version
+        """Snapshot refresh: write the full fetched window as the
+        target's new version and commit the window's maxima — a first
+        sync (STANDARD) and the ``-truncate`` flag (TRUNCATE)."""
         fetched = fetcher.full().cache()
         try:
-            row = fetched.agg(
-                F.max(key).alias("max_key"),
-                F.max(ver).alias("max_ver")
-                if ver in source.columns
-                else F.lit(None).alias("max_ver"),
-            ).first()
-            report = SyncReport(table=name, mode=TRUNCATE)
-            report.inserted = self._overwrite_and_commit(
-                name,
-                self._widen_for_refresh(fetched, target, evolve_schema),
-                target,
-                row["max_key"],
-                row["max_ver"],
+            window = self._window_stats(fetched)
+            inserted = self._overwrite_and_commit(
+                name, fetched, target, window["max_key"], window["max_ver"], evolve_schema
             )
         finally:
             fetched.unpersist()
-        return report
+        return SyncReport(table=name, mode=mode, inserted=inserted)
 
     #: optional tombstone marker column in CDC batches: rows where it is
     #: true DELETE their key from the target instead of upserting
@@ -420,13 +411,8 @@ class SyncEngine:
             or report.excess_percent >= cfg.truncate_threshold_percent
         ):
             report.mode = TRUNCATE
-            fetched = fetcher.full()
             report.inserted = self._overwrite_and_commit(
-                name,
-                self._widen_for_refresh(fetched, target, evolve_schema),
-                target,
-                max_key,
-                max_ver,
+                name, fetcher.full(), target, max_key, max_ver, evolve_schema
             )
             return report
 
@@ -447,19 +433,16 @@ class SyncEngine:
 
             # T4: late-data widening — rows older than the watermark but
             # absent from the target must still be recovered
-            # (CopyOrchestrator.cs:1106-1123)
+            # (CopyOrchestrator.cs:1106-1123). A missing row with a NULL
+            # version counts as version 0 (_premerge_metrics), even beside
+            # versioned ones: `version >= ts` is null-rejecting, so without
+            # that floor the row would not be fetched. The reference
+            # substitutes an all-zeros timestamp here
+            # (CopyOrchestrator.cs:1115-1118); the fetch admits NULL
+            # versions when the threshold is <= 0.
             fetch_ts = state.src_ts
             if row["min_missing_ver"] is not None:
                 fetch_ts = min(fetch_ts, row["min_missing_ver"])
-            elif row["missing"]:
-                # missing rows exist but ALL carry a NULL version: F.min
-                # skipped them, and `version >= ts` is null-rejecting —
-                # without a floor they are re-reported missing every cycle
-                # without converging. The reference substitutes an
-                # all-zeros timestamp here (CopyOrchestrator.cs:1115-1118);
-                # watermark_scan additionally admits NULL versions when
-                # the threshold is <= 0.
-                fetch_ts = 0
             fetch_floor = min_key if row["min_missing_key"] is None else min(
                 min_key, row["min_missing_key"]
             )
@@ -514,45 +497,31 @@ class SyncEngine:
         source and nothing else at ANY scale. With a target frame the
         row adds its half: ``tgt_total``, ``tgt_changed``, ``t_sum*``
         and ``t_max_ver``, the fields a witness stores."""
-        key = self.config.key
-        ver = self.config.version
-        tagged = control.select(
-            F.col(key), F.col(ver).alias("__v"), F.lit(1).alias("__c"), F.lit(0).alias("__t")
-        )
-        if tgt_df is not None:
-            tagged = tagged.unionByName(
-                tgt_df.select(
-                    F.col(key),
-                    F.col(ver).alias("__v"),
-                    F.lit(0).alias("__c"),
-                    F.lit(1).alias("__t"),
-                )
-            )
-        on_ctl = F.col("__c") == 1
-        on_tgt = F.col("__t") == 1
-        h1 = F.xxhash64(F.col(key)).cast("decimal(38,0)")
-        h2 = F.xxhash64(F.col(key), F.lit(0x5EED)).cast("decimal(38,0)")
+        s_key, t_key = F.col(f"s_{self.config.key}"), F.col(f"t_{self.config.key}")
+        tagged = self._tag_sides(control, tgt_df, _BY_VERSION)
+
+        def key_hash(k, *salt):
+            return F.xxhash64(k, *salt).cast("decimal(38,0)")
+
         source_half = [
-            F.count(F.when(on_ctl, 1)).alias("control_rows"),
-            F.count(F.when(on_ctl & (F.col("__v") > F.lit(state.src_ts)), 1)).alias(
-                "src_changed"
-            ),
-            F.min(F.when(on_ctl, F.col(key))).alias("min_key"),
-            F.max(F.when(on_ctl, F.col(key))).alias("max_key"),
-            F.max(F.when(on_ctl, F.col("__v"))).alias("max_ver"),
-            F.sum(F.when(on_ctl, h1)).alias("c_sum1"),
-            F.sum(F.when(on_ctl, h2)).alias("c_sum2"),
+            F.count(s_key).alias("control_rows"),
+            F.count(F.when(F.col("s_rv") > F.lit(state.src_ts), 1)).alias("src_changed"),
+            F.min(s_key).alias("min_key"),
+            F.max(s_key).alias("max_key"),
+            F.max("s_rv").alias("max_ver"),
+            F.sum(F.when(s_key.isNotNull(), key_hash(s_key))).alias("c_sum1"),
+            F.sum(F.when(s_key.isNotNull(), key_hash(s_key, F.lit(0x5EED)))).alias("c_sum2"),
         ]
-        target_half = [
-            F.count(F.when(on_tgt, 1)).alias("tgt_total"),
-            F.count(F.when(on_tgt & (F.col("__v") > F.lit(state.tgt_ts)), 1)).alias(
-                "tgt_changed"
-            ),
-            F.sum(F.when(on_tgt, h1)).alias("t_sum1"),
-            F.sum(F.when(on_tgt, h2)).alias("t_sum2"),
-            F.max(F.when(on_tgt, F.col("__v"))).alias("t_max_ver"),
-        ]
-        return tagged.agg(*source_half, *(target_half if tgt_df is not None else []))
+        if tgt_df is None:
+            return tagged.agg(*source_half)
+        return tagged.agg(
+            *source_half,
+            F.count(t_key).alias("tgt_total"),
+            F.count(F.when(F.col("t_rv") > F.lit(state.tgt_ts), 1)).alias("tgt_changed"),
+            F.sum(F.when(t_key.isNotNull(), key_hash(t_key))).alias("t_sum1"),
+            F.sum(F.when(t_key.isNotNull(), key_hash(t_key, F.lit(0x5EED)))).alias("t_sum2"),
+            F.max("t_rv").alias("t_max_ver"),
+        )
 
     def _learn_witness(self, name: str, probed: TableState, witness: dict) -> None:
         """Store the target half a scan probe found in sync, under the
@@ -566,6 +535,42 @@ class SyncEngine:
 
         self.store.merge_commit(name, replace(probed, witness=witness), _merge)
 
+    def _tag_sides(
+        self, src: DataFrame, tgt_df: DataFrame | None, context: delta.ComparisonContext
+    ) -> DataFrame:
+        """Both sides' rows in one frame: each side's compared columns
+        under its own prefix (delta.side_columns: ``s_<key>``, ``s_rv``,
+        ... on source rows; ``t_*`` on target rows), NULL on the other
+        side's rows, so a non-NULL ``s_<key>``/``t_<key>`` tags a row's
+        side. ``tgt_df=None`` tags the source side alone."""
+        names = dict(key=self.config.key, recversion=self.config.version)
+        tagged = src.select(*delta.side_columns("s", context, **names))
+        if tgt_df is not None:
+            tagged = tagged.unionByName(
+                tgt_df.select(*delta.side_columns("t", context, **names)),
+                allowMissingColumns=True,
+            )
+        return tagged
+
+    def _pair_by_key(
+        self, src: DataFrame, tgt_df: DataFrame, context: delta.ComparisonContext
+    ) -> DataFrame:
+        """The per-key pairing of both delta modes: one row per key seen
+        on either side, carrying both sides' compared columns — the
+        shape delta.classify_changes gets from a full-outer join, here
+        from the tagged union and ONE groupBy on the key. Both sides are
+        unique on the key (the target is the keyed table, the source the
+        top-N window of one), so every ``s_*``/``t_*`` column has at most
+        one non-NULL value per key and max() recovers it. One
+        hash-partition exchange, no join and no sort: a full-outer
+        equi-join cannot broadcast and costs two exchanges plus two
+        sorts."""
+        key = self.config.key
+        tagged = self._tag_sides(src, tgt_df, context)
+        return tagged.groupBy(F.coalesce(f"s_{key}", f"t_{key}").alias(key)).agg(
+            *[F.max(c).alias(c) for c in tagged.columns]
+        )
+
     def _premerge_metrics(
         self, control: DataFrame, tgt_df: DataFrame, state: TableState
     ) -> DataFrame:
@@ -574,54 +579,31 @@ class SyncEngine:
         pays four (control agg, target agg, missing-keys agg, pre-write
         survivors count).
 
-        Physically a tagged UNION + groupBy(key) instead of a full-outer
-        join: both sides are unique on the key (the target is the keyed
-        table, the control is the top-N window of one), so per-key max
-        over the tagged rows reconstructs the exact (control, target)
-        pairing with ONE hash-partition exchange — a full-outer equi-join
-        cannot broadcast and costs two exchanges plus two sorts. Only
-        (key, version) pairs move, ~16 B/row. This is the entire cost of
-        the reference's no-change fast path (R6), so its plan shape is
-        the engine's headline number; plan-property tests pin
-        zero-join/single-exchange."""
-        key = self.config.key
-        ver = self.config.version
-        c = control.select(
-            F.col(key), F.col(ver).alias("__v"), F.lit(1).alias("__c"), F.lit(0).alias("__t")
-        )
-        t = tgt_df.select(
-            F.col(key), F.col(ver).alias("__v"), F.lit(0).alias("__c"), F.lit(1).alias("__t")
-        )
-        per_key = (
-            c.unionByName(t)
-            .groupBy(key)
-            .agg(
-                F.max(F.when(F.col("__c") == 1, F.col("__v"))).alias("__sv"),
-                F.max(F.when(F.col("__t") == 1, F.col("__v"))).alias("__tv"),
-                F.max("__c").alias("__on_c"),
-                F.max("__t").alias("__on_t"),
-            )
-        )
-        on_ctl = F.col("__on_c") == 1
-        is_missing = on_ctl & (F.col("__on_t") == 0)
+        Pairs only (key, version) rows, ~16 B/row, through _pair_by_key.
+        This is the INCREMENTAL cycle's pairing pass, the one shuffle
+        it adds to the no-change probe (_fastpath_metrics); plan-property
+        tests pin zero-join/single-exchange."""
+        s_key, t_key = F.col(f"s_{self.config.key}"), F.col(f"t_{self.config.key}")
+        per_key = self._pair_by_key(control, tgt_df, _BY_VERSION)
+        is_missing = t_key.isNull()
         # survivor = target row whose key is in the window and not marked
         # changed — the complement of the J4/J5 delete set
         is_survivor = (
-            (F.col("__on_t") == 1)
-            & on_ctl
-            & ~F.coalesce(F.col("__sv") > F.lit(state.tgt_ts), F.lit(False))
+            t_key.isNotNull()
+            & s_key.isNotNull()
+            & ~F.coalesce(F.col("s_rv") > F.lit(state.tgt_ts), F.lit(False))
         )
         return per_key.agg(
-            F.count(F.when(on_ctl, 1)).alias("control_rows"),
-            F.count(F.when(F.col("__sv") > F.lit(state.src_ts), 1)).alias("src_changed"),
-            F.min(F.when(on_ctl, F.col(key))).alias("min_key"),
-            F.max(F.when(on_ctl, F.col(key))).alias("max_key"),
-            F.max("__sv").alias("max_ver"),
-            F.count(F.when(F.col("__on_t") == 1, 1)).alias("tgt_total"),
-            F.count(F.when(F.col("__tv") > F.lit(state.tgt_ts), 1)).alias("tgt_changed"),
+            F.count(s_key).alias("control_rows"),
+            F.count(F.when(F.col("s_rv") > F.lit(state.src_ts), 1)).alias("src_changed"),
+            F.min(s_key).alias("min_key"),
+            F.max(s_key).alias("max_key"),
+            F.max("s_rv").alias("max_ver"),
+            F.count(t_key).alias("tgt_total"),
+            F.count(F.when(F.col("t_rv") > F.lit(state.tgt_ts), 1)).alias("tgt_changed"),
             F.count(F.when(is_missing, 1)).alias("missing"),
-            F.min(F.when(is_missing, F.col("__sv"))).alias("min_missing_ver"),
-            F.min(F.when(is_missing, F.col(key))).alias("min_missing_key"),
+            F.min(F.when(is_missing, F.coalesce("s_rv", F.lit(0)))).alias("min_missing_ver"),
+            F.min(F.when(is_missing, s_key)).alias("min_missing_key"),
             F.count(F.when(is_survivor, 1)).alias("survivors"),
         )
 
@@ -630,102 +612,116 @@ class SyncEngine:
     def _sync_standard(
         self,
         name: str,
-        source: DataFrame,
         target: ParquetTarget,
+        state: TableState,
         fetcher,
         evolve_schema: bool = False,
     ) -> SyncReport:
-        cfg = self.config
-        key, ver = cfg.key, cfg.version
-
+        """State-loss compare against an existing target: pair the full
+        fetched window with the WHOLE target and classify every key by
+        CompareRecords. A target key outside the window is DELETED, so
+        rows that fell below it go; the reference pairs only target keys
+        >= the window's minimum (AxDbDataService.cs:737) and keeps
+        them."""
+        key = self.config.key
+        kind = F.col("change_type")
         fetched = fetcher.full().cache()
-        classified = None
+        changed = None
         try:
-            row = fetched.agg(
-                F.min(key).alias("min_key"), F.max(key).alias("max_key"),
-                F.max(ver).alias("max_ver")
-                if ver in source.columns
-                else F.lit(None).alias("max_ver"),
-            ).first()
-            min_key, max_key, max_ver = row["min_key"], row["max_key"], row["max_ver"]
-
-            if not target.exists() or min_key is None:
-                report = SyncReport(table=name, mode=STANDARD)
-                report.inserted = self._overwrite_and_commit(
-                    name, fetched, target, max_key, max_ver
-                )
-                return report
-
-            tgt_df = target.read(self.spark)
-            # J1 scoped to keys >= min fetched key (GetAxDbVersionMapAsync's
-            # WHERE RecId >= @MinRecId, AxDbDataService.cs:737)
-            tgt_window = tgt_df.filter(F.col(key) >= F.lit(min_key))
-            state = self.store.get(name)
-            # the engine's version column (cfg.version, default
-            # SysRowVersion) must drive the comparison: with the default
-            # D365 names the context would report has_recversion=False and
-            # classification silently degrades to key-only — modified
-            # rows never re-sync
-            classified = delta.classify_changes(
-                fetched,
-                tgt_window,
-                key=key,
-                max_transferred_key=state.max_transferred_key,
-                recversion=self.config.version,
-            ).cache()
-            counts = {
-                r["change_type"]: r["cnt"] for r in delta.change_counts(classified).collect()
-            }
-
-            incoming_keys = classified.filter(
-                F.col("change_type").isin(delta.MODIFIED, delta.NEW)
-            ).select(key)
-            deleted_keys = classified.filter(F.col("change_type") == delta.DELETED).select(key)
-
-            report = SyncReport(table=name, mode=STANDARD, classification=counts)
-            report.inserted = counts.get(delta.MODIFIED, 0) + counts.get(delta.NEW, 0)
-            report.deleted = counts.get(delta.MODIFIED, 0) + counts.get(delta.DELETED, 0)
-            target.merge(
-                self.spark,
-                fetched.join(incoming_keys, on=key, how="left_semi"),
-                deleted_keys,
-                evolve_schema=evolve_schema,
+            # only the changed keys are kept: the merge reads them three
+            # times, and Spark's adaptive execution reuses no shuffle
+            # above a cached scan, so each read would pair again
+            changed = (
+                self._classify_by_key(fetched, target.read(self.spark), state.max_transferred_key)
+                .filter(kind != delta.UNCHANGED)
+                .select(key, kind)
+                .cache()
             )
+            kinds = (delta.NEW, delta.MODIFIED, delta.DELETED)
+            counts = changed.agg(*[F.count(F.when(kind == t, 1)).alias(t) for t in kinds]).first()
+            counts = counts.asDict()
+            window = self._window_stats(fetched)
+            counts[delta.UNCHANGED] = window["rows"] - counts[delta.NEW] - counts[delta.MODIFIED]
+            report = SyncReport(
+                table=name,
+                mode=STANDARD,
+                classification={t: counts[t] for t in delta.CHANGE_TYPES if counts[t]},
+                inserted=counts[delta.MODIFIED] + counts[delta.NEW],
+                deleted=counts[delta.MODIFIED] + counts[delta.DELETED],
+            )
+            if report.inserted or report.deleted:
+                # a deleted key matches no fetched row and a new one no
+                # target row, so one key set is both the upserts' filter
+                # and the doomed keys
+                keys = changed.select(key)
+                target.merge(
+                    self.spark,
+                    fetched.join(keys, on=key, how="left_semi"),
+                    keys,
+                    evolve_schema=evolve_schema,
+                )
             # full-window fetch: the fetched maxima ARE the source's
             # truth, so overwrite (a restore-lowered rowversion must stick)
-            self._commit_state(name, max_key, max_ver, overwrite=True)
-            return report
+            self._commit_state(name, window["max_key"], window["max_ver"], overwrite=True)
         finally:
-            if classified is not None:
-                classified.unpersist()
+            if changed is not None:
+                changed.unpersist()
             fetched.unpersist()
+        return report
+
+    def _classify_by_key(
+        self, src: DataFrame, tgt_df: DataFrame, max_transferred_key: int | None
+    ) -> DataFrame:
+        """STANDARD's pairing: _pair_by_key over every column
+        CompareRecords compares, plus ``change_type`` (delta.change_type).
+        The engine's version column (config.version, default
+        SysRowVersion) drives the comparison: with the default D365
+        names the context would report has_recversion=False and the
+        classification would silently degrade to key-only — modified
+        rows never re-sync."""
+        context = delta.ComparisonContext.from_columns(
+            src.columns, tgt_df.columns, recversion=self.config.version
+        )
+        return self._pair_by_key(src, tgt_df, context).withColumn(
+            "change_type", delta.change_type(context, self.config.key, max_transferred_key)
+        )
+
+    def _window_stats(self, fetched: DataFrame):
+        """Row count and maxima of a full fetched window: the maxima are
+        the watermarks a snapshot path commits."""
+        key, ver = self.config.key, self.config.version
+        return fetched.agg(
+            F.count("*").alias("rows"),
+            F.max(key).alias("max_key"),
+            (F.max(ver) if ver in fetched.columns else F.lit(None)).alias("max_ver"),
+        ).first()
 
     # -- commit machinery -----------------------------------------------------
 
-    def _widen_for_refresh(
-        self, fetched: DataFrame, target: ParquetTarget, evolve_schema: bool
-    ) -> DataFrame:
-        """Full-refresh frame under the evolution contract. A truncate
-        replaces every ROW, so per-row history cannot survive — but the
-        SCHEMA must: under evolve, columns the target carries that the
-        source has dropped stay present (all-NULL), so the -evolve
-        promise of a stable widened schema does not silently depend on
-        which cycle happened to cross the truncate threshold. Without
-        evolve: the refresh takes the source schema wholesale (the
-        reference's truncate semantics)."""
-        if not evolve_schema or not target.exists():
-            return fetched
-        tgt_shape = target.read(self.spark).limit(0)
-        _s2, widened = _align_for_evolution(tgt_shape, fetched)
-        return widened
-
     def _overwrite_and_commit(
-        self, name: str, df: DataFrame, target: ParquetTarget, max_key, max_ver
+        self,
+        name: str,
+        fetched: DataFrame,
+        target: ParquetTarget,
+        max_key,
+        max_ver,
+        evolve_schema: bool,
     ) -> int:
-        # write once, then count from the written footers — no pre-write
-        # cache+count materialization pass. Every caller is a snapshot
-        # path (full refresh), so the state commit OVERWRITES.
-        target.overwrite(df)
+        """Full refresh: overwrite the target with the fetched window,
+        then commit. Write once, then count from the written footers —
+        no pre-write cache+count materialization pass. Every caller is a
+        snapshot path, so the state commit OVERWRITES.
+
+        A refresh replaces every ROW, so per-row history cannot survive
+        — but under the evolution contract the SCHEMA must: columns the
+        target carries that the source has dropped stay present
+        (all-NULL), so the -evolve promise of a stable widened schema
+        does not silently depend on which cycle happened to cross the
+        truncate threshold. Without evolve the refresh takes the source
+        schema wholesale (the reference's truncate semantics)."""
+        if evolve_schema and target.exists():
+            _s, fetched = _align_for_evolution(target.read(self.spark).limit(0), fetched)
+        target.overwrite(fetched)
         self._commit_state(name, max_key, max_ver, overwrite=True)
         return target.num_rows()
 

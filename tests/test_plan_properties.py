@@ -176,6 +176,40 @@ def test_fused_sync_metrics_no_join_single_exchange(spark):
     assert row["missing"] == 0
 
 
+def test_standard_pairing_no_join_single_exchange(spark):
+    """The state-loss (STANDARD) compare pairs the fetched window with
+    the whole target through the same tagged-union groupBy as the
+    INCREMENTAL pass, carrying every column CompareRecords compares: no
+    join (the full-outer classify it replaced was a sort-merge join with
+    two exchanges and two sorts), and at most the key shuffle plus the
+    final singleton gather."""
+    from d365fo_db_sync_spark.state import StateStore
+    from d365fo_db_sync_spark.sync import SyncEngine, SyncConfig
+    import tempfile
+
+    orders = load_table(spark, SF, "orders")
+    k = F.col("o_orderkey")
+    src = orders.select(
+        k.alias("RecId"),
+        (k * 2).alias("SysRowVersion"),
+        F.col("o_orderdate").cast("timestamp_ntz").alias("MODIFIEDDATETIME"),
+    )
+    engine = SyncEngine(
+        spark, StateStore(tempfile.mktemp(suffix=".json")), SyncConfig()
+    )
+    classified = engine._classify_by_key(src, src.filter(k > 10), max_transferred_key=None)
+    kind = F.col("change_type")
+    counts = classified.agg(
+        *[F.count(F.when(kind == t, 1)).alias(t) for t in ("new", "modified", "deleted")]
+    )
+    ops = physical_operators(counts)
+    assert not [o for o in ops if "Join" in o], ops
+    assert ops.count("Exchange") <= 2, ops  # key shuffle + final singleton
+    row = counts.first()
+    assert row["new"] == src.filter(k <= 10).count()
+    assert row["modified"] == row["deleted"] == 0
+
+
 def test_noop_fastpath_probe_zero_shuffle(spark):
     """The R6 no-change probe must be map-only: no joins, and no
     Exchange other than the final singleton gather. This plan is the

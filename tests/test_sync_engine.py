@@ -613,6 +613,7 @@ def test_optimized_path_on_bucketed_target_matches_plain(env, tmp_path):
     # full-rewrite sink — deletes, modifications, window excess, and
     # late rows included.
     spark, store, engine, _ = env
+    engine.config.record_count = 100
     rows = make_rows(100)
     deleted = {1000 + 7, 1000 + 8}
     ver = 1000
@@ -626,13 +627,15 @@ def test_optimized_path_on_bucketed_target_matches_plain(env, tmp_path):
         new_rows.append(r)
     new_rows.append((3000, 2, 5, None, dt.datetime(2024, 1, 15), 7.0))  # late, old ver
 
-    # state loss, then modifies and deletes only: the window keeps its
-    # lower bound, so STANDARD's below-window defect stays out of play
+    # state loss, then modifies, deletes and inserts: the inserts push
+    # the 100-row window up past the two lowest keys, which must go
     standard_rows = [
         (r[0], r[1] + 1, r[2] + 5000, r[3], r[4], -r[5]) if r[0] % 15 == 0 else r
         for r in new_rows
         if r[0] not in {1000 + 31, 1000 + 64}
-    ]
+    ] + [(4000 + i, 2, 9000 + i, None, dt.datetime(2024, 3, 1), 1.0 * i) for i in range(5)]
+    standard_window = sorted(standard_rows)[-100:]
+    assert {r[0] for r in standard_window} == {r[0] for r in standard_rows} - {1000, 1001}
 
     finals, states = {}, {}
     for label, tgt in _three_sinks(tmp_path).items():
@@ -647,12 +650,13 @@ def test_optimized_path_on_bucketed_target_matches_plain(env, tmp_path):
         store.clear(name)
         r3 = engine.sync_table(name, df_of(spark, standard_rows), tgt)
         assert r3.mode == STANDARD, (label, r3)
-        assert r3.classification.get("deleted") == 2
+        assert r3.classification.get("deleted") == 4
+        assert r3.classification.get("new") == 5
         finals[label] = (incremental_rows, _rows_of(tgt, spark))
         states[label] = store.get(name)
     assert finals["plain"] == finals["bucketed"] == finals["manifest"]
     assert states["plain"] == states["bucketed"] == states["manifest"]
-    assert finals["plain"][1] == sorted((r[0], r[2], r[5]) for r in standard_rows)
+    assert finals["plain"][1] == sorted((r[0], r[2], r[5]) for r in standard_window)
 
 
 def test_bucketed_merge_crash_before_swap_leaves_old_version(env, tmp_path, monkeypatch):
