@@ -99,11 +99,13 @@ class ParquetTarget:
             raise FileNotFoundError(f"no live version under {self.root}")
         schema = self._schema_cache.get(path)
         if schema is None:
-            # a version published by an evolve_schema merge holds files
-            # of MIXED schemas (carried-forward buckets keep their old
-            # footers); the sidecar pins the unified schema so the read
-            # is deterministic — absent columns in old files surface as
-            # NULL, exactly the evolution semantics the merge promised
+            # the sidecar pins the schema without an inference job
+            # (unpartitioned overwrite writes it). A version published
+            # by an evolve_schema merge holds files of MIXED schemas
+            # (carried-forward buckets keep their old footers); there
+            # the pin also makes the read deterministic — absent
+            # columns in old files surface as NULL, exactly the
+            # evolution semantics the merge promised
             sidecar = os.path.join(path, self.SCHEMA_SIDECAR)
             if os.path.exists(sidecar):
                 import json
@@ -150,30 +152,35 @@ class ParquetTarget:
             shutil.rmtree(old, ignore_errors=True)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Stage + atomic pointer swap; old version GC'd after the swap."""
+        """Stage + atomic pointer swap; old version GC'd after the swap.
+
+        The staged version carries the written schema as its
+        ``_schema.json`` sidecar, so a read through ANY handle (the
+        orchestrator opens a fresh one per table per round) skips
+        Spark's schema-inference job. Parquet always stores top-level
+        fields nullable, so nullability is relaxed to match what
+        inference would return. Partitioned layouts are excluded:
+        inference reorders/re-types partition columns, so their reads
+        infer, and the first one memoizes the result."""
+        import json
+
+        from pyspark.sql.types import StructField, StructType
+
         name = f"v_{uuid.uuid4().hex[:12]}"
         staged = os.path.join(self.root, name)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(staged)
+        self._schema_cache = {}
+        if not self.partition_by:
+            schema = StructType(
+                [StructField(f.name, f.dataType, True, f.metadata) for f in df.schema.fields]
+            )
+            with open(os.path.join(staged, self.SCHEMA_SIDECAR), "w", encoding="utf-8") as f:
+                json.dump(schema.jsonValue(), f)
+            self._schema_cache = {staged: schema}
         self._swap_pointer(name, self.current_path())
-        # seed the schema memo with what we just wrote (parquet always
-        # stores top-level fields nullable, so relax nullability to
-        # match what inference would have returned). Partitioned
-        # layouts are excluded: inference reorders/re-types partition
-        # columns, so their first read re-infers and memoizes that.
-        from pyspark.sql.types import StructField, StructType
-
-        self._schema_cache = (
-            {}
-            if self.partition_by
-            else {
-                staged: StructType(
-                    [StructField(f.name, f.dataType, True) for f in df.schema.fields]
-                )
-            }
-        )
 
     def merge(
         self,

@@ -9,14 +9,20 @@ onto DataFrame ops + an atomic-rewrite sink:
 * perfect-sync fast path (R6)              -> one shuffle-free aggregate;
   its target half is memoized in StateStore per live version directory,
   so a no-change cycle on a known version reads only the source
-* 3-step delete + selective insert (T3)    -> one sink call,
-  target.merge(upserts, doomed_keys): every sink deletes the doomed and
-  upserted keys, inserts the upserts and publishes atomically; only which
-  files it rewrites depends on its layout (sinks.ParquetTarget)
+* 3-step delete + selective insert (T3)    -> on a one-bucket target
+  (sinks.ParquetTarget), which a merge would rewrite whole anyway, ONE
+  job: target.overwrite of the fetched window, which by the window
+  invariant IS survivors + inserts, with the report's per-key counts
+  observed inside that write. On a partial-rewrite sink, and on an
+  -evolve cycle, one sink call: target.merge(upserts, doomed_keys)
+  deletes the doomed and upserted keys, inserts the upserts and
+  publishes atomically, rewriting only the buckets the keys hash into
 * state-loss compare (STANDARD)            -> the full window paired with
   the WHOLE target by the same one-exchange groupBy as INCREMENTAL,
   classified by delta.change_type (CompareRecords); target keys outside
-  the window are deleted, and a cycle that finds no change writes nothing
+  the window are deleted, and a cycle that finds no change writes
+  nothing. A change is published as INCREMENTAL publishes it: the
+  cached window by overwrite on a one-bucket target, else a merge
 * late-data widening (T4)                  -> fetch threshold =
   min(stored watermark, min version among keys missing from target)
   (CopyOrchestrator.cs:1106-1123)
@@ -39,7 +45,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from d365fo_db_sync_spark import delta
@@ -94,6 +100,11 @@ class SyncReport:
     #: target was read), "" when no probe ran (STANDARD, forced
     #: TRUNCATE, merge_upsert)
     probe: str = ""
+    #: how the cycle published: "window" (the fetched window by
+    #: target.overwrite: first sync, TRUNCATE, and a changed INCREMENTAL
+    #: or STANDARD cycle on a one-bucket target), "merge" (target.merge)
+    #: or "" (nothing written). ``mode`` stays the logical decision.
+    write: str = ""
 
 
 def _witness_of(row, path: str) -> dict:
@@ -111,6 +122,22 @@ def _witness_of(row, path: str) -> dict:
         "sum2": exact(row["t_sum2"]),
         "max_ver": exact(row["t_max_ver"]),
     }
+
+
+def _writes_window(target: ParquetTarget, evolve_schema: bool) -> bool:
+    """Whether a changed delta cycle publishes the whole fetched window
+    by ``target.overwrite`` instead of ``target.merge``. A one-bucket
+    layout's merge rewrites the whole table anyway, and by the window
+    invariant survivors + upserts ARE the window. An -evolve cycle
+    merges: widen-and-retain keeps the survivors' values of columns the
+    source dropped, which the window no longer carries."""
+    return target.n_buckets == 1 and not evolve_schema
+
+
+def _check_drift(tgt_df: DataFrame, window: DataFrame) -> None:
+    """Strict mode's column-drift error, raised before anything is
+    written: the union analysis a merge runs on survivors and upserts."""
+    _ = tgt_df.limit(0).unionByName(window.limit(0)).schema
 
 
 def _witnessed_target(state: TableState, path: str | None) -> dict | None:
@@ -206,7 +233,7 @@ class SyncEngine:
             )
         finally:
             fetched.unpersist()
-        return SyncReport(table=name, mode=mode, inserted=inserted)
+        return SyncReport(table=name, mode=mode, inserted=inserted, write="window")
 
     #: optional tombstone marker column in CDC batches: rows where it is
     #: true DELETE their key from the target instead of upserting
@@ -255,6 +282,7 @@ class SyncEngine:
             if row["n"] == 0 and n_dead == 0:
                 report.mode = NO_CHANGE
             else:
+                report.write = "merge"
                 consumed = [c for c in (tomb, self.config.sequence_col) if c]
                 upserts = batch.filter(~is_tomb).drop(*consumed)
                 tombstoned = batch.filter(is_tomb).select(key)
@@ -411,20 +439,36 @@ class SyncEngine:
             or report.excess_percent >= cfg.truncate_threshold_percent
         ):
             report.mode = TRUNCATE
+            report.write = "window"
             report.inserted = self._overwrite_and_commit(
                 name, fetcher.full(), target, max_key, max_ver, evolve_schema
             )
             return report
 
-        # INCREMENTAL: pay the per-key pairing pass for the merge bounds
-        # (missing keys, T4 widening floor, survivor accounting). The
-        # merge below runs several jobs anyway, so the map-only probe
-        # above is noise here — while the no-change cycle (the path the
-        # reference's 15x headline is about) never reaches this shuffle.
-        # Cache control now: the pairing pass + changed_keys + merge
-        # joins all re-read it.
         if tgt_df is None:
             tgt_df = target.read(self.spark)
+
+        # INCREMENTAL on a one-bucket target: a merge would rewrite the
+        # whole table, so skip the pairing pass, the watermark fetch and
+        # the anti-joins and write the window in one job. Its per-key
+        # counts are observed inside that job; tgt_total is the probe's.
+        if _writes_window(target, evolve_schema):
+            counts = self._overwrite_window(fetcher.full(), tgt_df, target, state)
+            self._commit_state(name, max_key, max_ver)
+            report.write = "window"
+            report.missing = counts["missing"]
+            report.deleted = tgt_total - counts["survivors"]
+            report.inserted = counts["rows"] - counts["survivors"]
+            return report
+
+        # INCREMENTAL through target.merge (a partial-rewrite sink, or an
+        # -evolve cycle): pay the per-key pairing pass for the merge
+        # bounds (missing keys, T4 widening floor, survivor accounting),
+        # so the sink rewrites only the buckets the changed keys hash
+        # into. The no-change cycle (the path the reference's 15x
+        # headline is about) never reaches this shuffle.
+        # Cache control now: the pairing pass + changed_keys + merge
+        # joins all re-read it.
         control = control.cache()
         try:
             row = self._premerge_metrics(control, tgt_df, state).first()
@@ -464,6 +508,7 @@ class SyncEngine:
                 evolve_schema=evolve_schema,
             )
             self._commit_state(name, max_key, max_ver)
+            report.write = "merge"
             # accounting from the fused agg + the written footers: zero
             # extra jobs (previously a full recomputation of inserts +
             # survivors)
@@ -472,6 +517,37 @@ class SyncEngine:
         finally:
             control.unpersist()
         return report
+
+    def _overwrite_window(
+        self, window: DataFrame, tgt_df: DataFrame, target: ParquetTarget, state: TableState
+    ) -> dict:
+        """Publish the fetched window by ``target.overwrite`` and count,
+        in the write's own job, what a merge would have reported:
+        ``missing`` (window rows whose key the target lacks),
+        ``survivors`` (matched rows not above the target watermark: the
+        rows a merge keeps) and the ``rows`` written. The target is
+        unique on its key, so the left join adds no row."""
+        key, ver = self.config.key, self.config.version
+        _check_drift(tgt_df, window)
+        in_target = F.col("__in_target").isNotNull()
+        changed = F.coalesce(F.col(ver) > F.lit(state.tgt_ts), F.lit(False))
+        observed = Observation()
+        # the observe node sits above the join and, as the plain write
+        # adds no exchange, in the write's result stage: Spark applies a
+        # result task's accumulator updates once per partition, so a
+        # retried or speculative task cannot count its rows twice
+        paired = window.join(
+            tgt_df.select(key, F.lit(True).alias("__in_target")), on=key, how="left"
+        ).observe(
+            observed,
+            F.count(F.lit(1)).alias("rows"),
+            F.count(F.when(~in_target, 1)).alias("missing"),
+            F.count(F.when(in_target & ~changed, 1)).alias("survivors"),
+        )
+        target.overwrite(paired.select(*window.columns))
+        # read only after the write returned: get blocks until a
+        # finished query delivers the metrics
+        return observed.get
 
     def _fastpath_metrics(
         self, control: DataFrame, tgt_df: DataFrame | None, state: TableState
@@ -625,18 +701,22 @@ class SyncEngine:
         them."""
         key = self.config.key
         kind = F.col("change_type")
+        window_write = _writes_window(target, evolve_schema)
         fetched = fetcher.full().cache()
         changed = None
         try:
-            # only the changed keys are kept: the merge reads them three
-            # times, and Spark's adaptive execution reuses no shuffle
-            # above a cached scan, so each read would pair again
+            tgt_df = target.read(self.spark)
             changed = (
-                self._classify_by_key(fetched, target.read(self.spark), state.max_transferred_key)
+                self._classify_by_key(fetched, tgt_df, state.max_transferred_key)
                 .filter(kind != delta.UNCHANGED)
                 .select(key, kind)
-                .cache()
             )
+            if not window_write:
+                # only the changed keys are kept: the merge reads them
+                # three times, and Spark's adaptive execution reuses no
+                # shuffle above a cached scan, so each read would pair
+                # again
+                changed = changed.cache()
             kinds = (delta.NEW, delta.MODIFIED, delta.DELETED)
             counts = changed.agg(*[F.count(F.when(kind == t, 1)).alias(t) for t in kinds]).first()
             counts = counts.asDict()
@@ -649,7 +729,13 @@ class SyncEngine:
                 inserted=counts[delta.MODIFIED] + counts[delta.NEW],
                 deleted=counts[delta.MODIFIED] + counts[delta.DELETED],
             )
-            if report.inserted or report.deleted:
+            if (report.inserted or report.deleted) and window_write:
+                # a merge would rewrite the whole table: publish the
+                # cached window the classification just read
+                _check_drift(tgt_df, fetched)
+                target.overwrite(fetched)
+                report.write = "window"
+            elif report.inserted or report.deleted:
                 # a deleted key matches no fetched row and a new one no
                 # target row, so one key set is both the upserts' filter
                 # and the doomed keys
@@ -660,6 +746,7 @@ class SyncEngine:
                     keys,
                     evolve_schema=evolve_schema,
                 )
+                report.write = "merge"
             # full-window fetch: the fetched maxima ARE the source's
             # truth, so overwrite (a restore-lowered rowversion must stick)
             self._commit_state(name, window["max_key"], window["max_ver"], overwrite=True)
