@@ -10,7 +10,7 @@ Column expressions over a paired frame whose columns carry a side prefix
 * :func:`side_columns` projects one side onto its prefixed key and the
   version columns both sides have (:class:`ComparisonContext`);
 * :func:`change_type` is the classification: null-safe equality
-  (``eqNullSafe``) on the datetime columns reproduces the reference's
+  (``eqNullSafe``) on the version columns reproduces the reference's
   DBNull semantics (ValuesEqual, AxDbDataService.cs:872-886), and the
   RECVERSION=1 fallback rule (AxDbDataService.cs:801-814) is a
   predicate against the stored max-transferred key.
@@ -111,11 +111,11 @@ def change_type(
     * fallback mode (no datetime columns) and source RECVERSION == 1:
       ``unchanged`` iff target RECVERSION == 1 and key <= stored
       max-transferred key, else ``modified``
-    * otherwise: ``unchanged`` iff RECVERSION equal and every available
+    * otherwise: ``unchanged`` iff RECVERSION and every available
       datetime column null-safe-equal, else ``modified``."""
     equal: Column = F.lit(True)
     if context.has_recversion:
-        equal = equal & (F.col("s_rv") == F.col("t_rv"))
+        equal = equal & F.col("s_rv").eqNullSafe(F.col("t_rv"))
     if context.has_created:
         equal = equal & F.col("s_cd").eqNullSafe(F.col("t_cd"))
     if context.has_modified:

@@ -272,43 +272,6 @@ def expand_sql_template(
     return sql
 
 
-def compile_fetch(
-    spark: SparkSession,
-    source: DataFrame,
-    strategy: Strategy,
-    fields: list[str],
-    key: str = "RecId",
-    default_count: int = 10_000,
-    watermark_predicate: str = "(1 = 1)",
-) -> DataFrame:
-    """Strategy -> DataFrame plan over the source.
-
-    RECID/SYSTEM compile straight to declarative ops (top-N / full scan);
-    SQL templates expand and run through ``spark.sql`` on a temp view, so
-    the user query stays inside Catalyst (pushdown, pruning, folding).
-    """
-    from d365fo_db_sync_spark.scans import top_n_by_key
-
-    n = strategy.record_count or default_count
-    if strategy.type == StrategyType.SYSTEM:
-        return source.select(*fields)
-    if strategy.type == StrategyType.RECID:
-        return top_n_by_key(source, key, n, fields=fields)
-
-    view = f"__strategy_src_{strategy.table.lower()}"
-    source.createOrReplaceTempView(view)
-    sql = expand_sql_template(
-        strategy.sql_template, fields, n, watermark_predicate=watermark_predicate, key=key
-    )
-    sql = re.sub(
-        rf"\bFROM\s+\[?{re.escape(strategy.table)}\]?",
-        f"FROM {view}",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    return spark.sql(sql)
-
-
 class Fetcher:
     """The three physical specializations of one table's strategy
     (SURVEY §3 entry point 3): the reference expands ONE SQL template

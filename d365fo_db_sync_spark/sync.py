@@ -9,20 +9,25 @@ onto DataFrame ops + an atomic-rewrite sink:
 * perfect-sync fast path (R6)              -> one shuffle-free aggregate;
   its target half is memoized in StateStore per live version directory,
   so a no-change cycle on a known version reads only the source
+* snapshot refresh (first sync, -truncate,
+  the R5 fallback)                         -> ONE job: _publish_window
+  writes fetcher.full() and observes the rows written and their maxima
+  inside that write; the state commit takes the observed maxima
 * 3-step delete + selective insert (T3)    -> on a one-bucket target
-  (sinks.ParquetTarget), which a merge would rewrite whole anyway, ONE
-  job: target.overwrite of the fetched window, which by the window
-  invariant IS survivors + inserts, with the report's per-key counts
-  observed inside that write. On a partial-rewrite sink, and on an
-  -evolve cycle, one sink call: target.merge(upserts, doomed_keys)
-  deletes the doomed and upserted keys, inserts the upserts and
-  publishes atomically, rewriting only the buckets the keys hash into
+  (sinks.ParquetTarget), which a merge would rewrite whole anyway, the
+  same _publish_window of the fetched window, which by the window
+  invariant IS survivors + inserts, also observing the report's
+  per-key counts. On a partial-rewrite sink, and on an -evolve cycle,
+  one sink call: target.merge(upserts, doomed_keys) deletes the doomed
+  and upserted keys, inserts the upserts (the missing and changed
+  rows) and publishes atomically, rewriting only the buckets the keys
+  hash into
 * state-loss compare (STANDARD)            -> the full window paired with
   the WHOLE target by the same one-exchange groupBy as INCREMENTAL,
   classified by delta.change_type (CompareRecords); target keys outside
   the window are deleted, and a cycle that finds no change writes
   nothing. A change is published as INCREMENTAL publishes it: the
-  cached window by overwrite on a one-bucket target, else a merge
+  cached window by _publish_window on a one-bucket target, else a merge
 * late-data widening (T4)                  -> fetch threshold =
   min(stored watermark, min version among keys missing from target)
   (CopyOrchestrator.cs:1106-1123)
@@ -45,7 +50,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from d365fo_db_sync_spark import delta
@@ -140,6 +145,19 @@ def _check_drift(tgt_df: DataFrame, window: DataFrame) -> None:
     _ = tgt_df.limit(0).unionByName(window.limit(0)).schema
 
 
+def _above(version, ts) -> Column:
+    """Whether a row's version is above the watermark ``ts``; a NULL
+    version (or watermark) counts as not above, i.e. not changed."""
+    return F.coalesce(F.col(version) > F.lit(ts), F.lit(False))
+
+
+def _with_in_target(window: DataFrame, tgt_df: DataFrame, key: str) -> DataFrame:
+    """``window`` left-joined with the target's keys: ``__in_target`` is
+    true where the target holds the row's key and NULL elsewhere. The
+    target is unique on its key, so the join adds no row."""
+    return window.join(tgt_df.select(key, F.lit(True).alias("__in_target")), on=key, how="left")
+
+
 def _witnessed_target(state: TableState, path: str | None) -> dict | None:
     """The target half of the R6 probe as the stored witness certifies
     it, or None when the probe must scan the target. The witness holds
@@ -205,8 +223,11 @@ class SyncEngine:
             )
         state = self.store.get(name)
         if force_truncate or not target.exists():
-            report = self._refresh(
-                name, TRUNCATE if force_truncate else STANDARD, target, fetcher, evolve_schema
+            report = SyncReport(
+                table=name,
+                mode=TRUNCATE if force_truncate else STANDARD,
+                inserted=self._refresh(name, target, fetcher, evolve_schema),
+                write="window",
             )
         elif cfg.version in source.columns and state.src_ts is not None:
             report = self._sync_optimized(
@@ -219,21 +240,66 @@ class SyncEngine:
         report.duration_sec = time.time() - t0
         return report
 
-    def _refresh(
-        self, name: str, mode: str, target: ParquetTarget, fetcher, evolve_schema: bool
-    ) -> SyncReport:
-        """Snapshot refresh: write the full fetched window as the
-        target's new version and commit the window's maxima — a first
-        sync (STANDARD) and the ``-truncate`` flag (TRUNCATE)."""
-        fetched = fetcher.full().cache()
-        try:
-            window = self._window_stats(fetched)
-            inserted = self._overwrite_and_commit(
-                name, fetched, target, window["max_key"], window["max_ver"], evolve_schema
-            )
-        finally:
-            fetched.unpersist()
-        return SyncReport(table=name, mode=mode, inserted=inserted, write="window")
+    def _refresh(self, name: str, target: ParquetTarget, fetcher, evolve_schema: bool) -> int:
+        """Snapshot refresh — a first sync, the ``-truncate`` flag and
+        the R5 cost-based fallback: publish the full fetched window as
+        the target's new version in one job, then commit the maxima
+        observed in that write. Returns the rows written.
+
+        The state commit OVERWRITES: the window's maxima are the
+        source's truth, so a refresh after a source restore lowers the
+        watermark to the rebuilt source's maximum instead of pinning the
+        stale higher one.
+
+        A refresh replaces every ROW, so per-row history cannot survive
+        — but under the evolution contract the SCHEMA must: columns the
+        target carries that the source has dropped stay present
+        (all-NULL), so the -evolve promise of a stable widened schema
+        does not silently depend on which cycle happened to cross the
+        truncate threshold. Without evolve the refresh takes the source
+        schema wholesale (the reference's truncate semantics)."""
+        window = fetcher.full()
+        if evolve_schema and target.exists():
+            _s, window = _align_for_evolution(target.read(self.spark).limit(0), window)
+        written = self._publish_window(window, target)
+        self._commit_state(name, written["max_key"], written["max_ver"], overwrite=True)
+        return written["rows"]
+
+    def _publish_window(
+        self,
+        window: DataFrame,
+        target: ParquetTarget,
+        tgt_df: DataFrame | None = None,
+        tgt_ts: int | None = None,
+    ) -> dict:
+        """Publish ``window`` by ``target.overwrite`` and count, in the
+        write's own job, its _window_stats. Given the target's rows
+        ``tgt_df``, also count what a merge would have reported:
+        ``missing`` (window rows whose key the target lacks) and
+        ``survivors`` (matched rows not above the target watermark
+        ``tgt_ts``: the rows a merge keeps).
+
+        On a one-bucket layout the observe node sits in the write's
+        result stage, whose task updates Spark applies once per
+        partition. A layout whose overwrite adds an exchange (a bucketed
+        sink) observes in a map stage, where a re-run task may count its
+        rows twice; the maxima cannot change that way."""
+        key, ver = self.config.key, self.config.version
+        metrics = self._window_stats(window)
+        written = window
+        if tgt_df is not None:
+            in_target = F.col("__in_target").isNotNull()
+            written = _with_in_target(window, tgt_df, key)
+            metrics += [
+                F.count(F.when(~in_target, 1)).alias("missing"),
+                F.count(F.when(in_target & ~_above(ver, tgt_ts), 1)).alias("survivors"),
+            ]
+        observed = Observation()
+        target.overwrite(written.observe(observed, *metrics).select(*window.columns))
+        # read only after the write returned: get blocks until a
+        # finished query delivers the metrics, and a failed write must
+        # not wait on them
+        return observed.get
 
     #: optional tombstone marker column in CDC batches: rows where it is
     #: true DELETE their key from the target instead of upserting
@@ -440,9 +506,7 @@ class SyncEngine:
         ):
             report.mode = TRUNCATE
             report.write = "window"
-            report.inserted = self._overwrite_and_commit(
-                name, fetcher.full(), target, max_key, max_ver, evolve_schema
-            )
+            report.inserted = self._refresh(name, target, fetcher, evolve_schema)
             return report
 
         if tgt_df is None:
@@ -453,7 +517,9 @@ class SyncEngine:
         # the anti-joins and write the window in one job. Its per-key
         # counts are observed inside that job; tgt_total is the probe's.
         if _writes_window(target, evolve_schema):
-            counts = self._overwrite_window(fetcher.full(), tgt_df, target, state)
+            window = fetcher.full()
+            _check_drift(tgt_df, window)
+            counts = self._publish_window(window, target, tgt_df, state.tgt_ts)
             self._commit_state(name, max_key, max_ver)
             report.write = "window"
             report.missing = counts["missing"]
@@ -496,14 +562,23 @@ class SyncEngine:
             fetched = fetcher.incremental(fetch_ts, fetch_floor)
 
             # T3: three-step merge. doomed = excess (J5 complement) ∪
-            # modified (J4); fetched rows replace-or-insert (T5: a
-            # replayed row replaces its own copy). The sink rewrites only
-            # what its layout needs to.
-            changed_keys = control.filter(F.col(ver) > F.lit(state.tgt_ts)).select(key)
+            # modified (J4); the fetched rows the target lacks or holds
+            # below their version replace-or-insert (T5). A fetched row
+            # the target already holds unchanged (T4's lowered floor
+            # refetches them) is left alone, so -evolve keeps its
+            # retained columns and its bucket is not rewritten. The sink
+            # rewrites only what its layout needs to.
+            changed = _above(ver, state.tgt_ts)
+            upserts = (
+                _with_in_target(fetched, tgt_df, key)
+                .filter(F.col("__in_target").isNull() | changed)
+                .select(*fetched.columns)
+            )
+            changed_keys = control.filter(changed).select(key)
             excess = tgt_df.join(control.select(key), on=key, how="left_anti").select(key)
             target.merge(
                 self.spark,
-                fetched,
+                upserts,
                 excess.unionByName(changed_keys),
                 evolve_schema=evolve_schema,
             )
@@ -517,37 +592,6 @@ class SyncEngine:
         finally:
             control.unpersist()
         return report
-
-    def _overwrite_window(
-        self, window: DataFrame, tgt_df: DataFrame, target: ParquetTarget, state: TableState
-    ) -> dict:
-        """Publish the fetched window by ``target.overwrite`` and count,
-        in the write's own job, what a merge would have reported:
-        ``missing`` (window rows whose key the target lacks),
-        ``survivors`` (matched rows not above the target watermark: the
-        rows a merge keeps) and the ``rows`` written. The target is
-        unique on its key, so the left join adds no row."""
-        key, ver = self.config.key, self.config.version
-        _check_drift(tgt_df, window)
-        in_target = F.col("__in_target").isNotNull()
-        changed = F.coalesce(F.col(ver) > F.lit(state.tgt_ts), F.lit(False))
-        observed = Observation()
-        # the observe node sits above the join and, as the plain write
-        # adds no exchange, in the write's result stage: Spark applies a
-        # result task's accumulator updates once per partition, so a
-        # retried or speculative task cannot count its rows twice
-        paired = window.join(
-            tgt_df.select(key, F.lit(True).alias("__in_target")), on=key, how="left"
-        ).observe(
-            observed,
-            F.count(F.lit(1)).alias("rows"),
-            F.count(F.when(~in_target, 1)).alias("missing"),
-            F.count(F.when(in_target & ~changed, 1)).alias("survivors"),
-        )
-        target.overwrite(paired.select(*window.columns))
-        # read only after the write returned: get blocks until a
-        # finished query delivers the metrics
-        return observed.get
 
     def _fastpath_metrics(
         self, control: DataFrame, tgt_df: DataFrame | None, state: TableState
@@ -667,7 +711,7 @@ class SyncEngine:
         is_survivor = (
             t_key.isNotNull()
             & s_key.isNotNull()
-            & ~F.coalesce(F.col("s_rv") > F.lit(state.tgt_ts), F.lit(False))
+            & ~_above("s_rv", state.tgt_ts)
         )
         return per_key.agg(
             F.count(s_key).alias("control_rows"),
@@ -720,7 +764,7 @@ class SyncEngine:
             kinds = (delta.NEW, delta.MODIFIED, delta.DELETED)
             counts = changed.agg(*[F.count(F.when(kind == t, 1)).alias(t) for t in kinds]).first()
             counts = counts.asDict()
-            window = self._window_stats(fetched)
+            window = fetched.agg(*self._window_stats(fetched)).first()
             counts[delta.UNCHANGED] = window["rows"] - counts[delta.NEW] - counts[delta.MODIFIED]
             report = SyncReport(
                 table=name,
@@ -733,7 +777,7 @@ class SyncEngine:
                 # a merge would rewrite the whole table: publish the
                 # cached window the classification just read
                 _check_drift(tgt_df, fetched)
-                target.overwrite(fetched)
+                self._publish_window(fetched, target)
                 report.write = "window"
             elif report.inserted or report.deleted:
                 # a deleted key matches no fetched row and a new one no
@@ -773,44 +817,18 @@ class SyncEngine:
             "change_type", delta.change_type(context, self.config.key, max_transferred_key)
         )
 
-    def _window_stats(self, fetched: DataFrame):
-        """Row count and maxima of a full fetched window: the maxima are
-        the watermarks a snapshot path commits."""
+    def _window_stats(self, window: DataFrame) -> list:
+        """Aggregates of a full fetched window: its ``rows`` and the
+        maxima a snapshot path commits, ``max_key`` and ``max_ver``
+        (NULL without a version column)."""
         key, ver = self.config.key, self.config.version
-        return fetched.agg(
-            F.count("*").alias("rows"),
+        return [
+            F.count(F.lit(1)).alias("rows"),
             F.max(key).alias("max_key"),
-            (F.max(ver) if ver in fetched.columns else F.lit(None)).alias("max_ver"),
-        ).first()
+            F.max(ver if ver in window.columns else F.lit(None).cast("long")).alias("max_ver"),
+        ]
 
     # -- commit machinery -----------------------------------------------------
-
-    def _overwrite_and_commit(
-        self,
-        name: str,
-        fetched: DataFrame,
-        target: ParquetTarget,
-        max_key,
-        max_ver,
-        evolve_schema: bool,
-    ) -> int:
-        """Full refresh: overwrite the target with the fetched window,
-        then commit. Write once, then count from the written footers —
-        no pre-write cache+count materialization pass. Every caller is a
-        snapshot path, so the state commit OVERWRITES.
-
-        A refresh replaces every ROW, so per-row history cannot survive
-        — but under the evolution contract the SCHEMA must: columns the
-        target carries that the source has dropped stay present
-        (all-NULL), so the -evolve promise of a stable widened schema
-        does not silently depend on which cycle happened to cross the
-        truncate threshold. Without evolve the refresh takes the source
-        schema wholesale (the reference's truncate semantics)."""
-        if evolve_schema and target.exists():
-            _s, fetched = _align_for_evolution(target.read(self.spark).limit(0), fetched)
-        target.overwrite(fetched)
-        self._commit_state(name, max_key, max_ver, overwrite=True)
-        return target.num_rows()
 
     def _commit_state(
         self, name: str, max_key, max_ver, overwrite: bool = False

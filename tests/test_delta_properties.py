@@ -27,7 +27,7 @@ BASE_TS = dt.datetime(2024, 1, 1)
 row_st = st.fixed_dictionaries(
     {
         "key": st.integers(min_value=1, max_value=40),
-        "ver": st.one_of(st.just(1), st.integers(min_value=-3, max_value=5)),
+        "ver": st.one_of(st.just(1), st.none(), st.integers(min_value=-3, max_value=5)),
         "created": st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
         "modified": st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
     }

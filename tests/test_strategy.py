@@ -98,7 +98,7 @@ def test_expand_sql_template():
 
 
 def test_compile_fetch_sql_runs(spark):
-    from d365fo_db_sync_spark.strategy import compile_fetch
+    from d365fo_db_sync_spark.strategy import Fetcher
 
     src = spark.createDataFrame(
         [(i, f"n{i}", i % 3) for i in range(20)], "RecId long, NAME string, GRP int"
@@ -108,7 +108,7 @@ def test_compile_fetch_sql_runs(spark):
         type=StrategyType.SQL,
         sql_template="SELECT TOP (@recordCount) * FROM T WHERE GRP = 1 AND @sysRowVersionFilter ORDER BY RecId DESC",
     )
-    out = compile_fetch(spark, src, s, fields=["RecId", "NAME"], default_count=3)
+    out = Fetcher(spark, src, s, fields=["RecId", "NAME"], default_count=3).full()
     rows = out.collect()
     assert len(rows) == 3
     assert [r["RecId"] for r in rows] == [19, 16, 13]

@@ -1,12 +1,13 @@
-"""How a changed cycle publishes, per sink layout.
+"""How a cycle publishes, per sink layout.
 
-A one-bucket target (the plain ParquetTarget) is rewritten whole by any
-merge, so a changed INCREMENTAL or STANDARD cycle there publishes the
-fetched window with ``target.overwrite`` (``SyncReport.write ==
-"window"``) and observes its per-key counts inside that write. A
-partial-rewrite sink, and an -evolve cycle, keep ``target.merge``
-(``"merge"``). Both must end every cycle with the same rows, state and
-counts."""
+A snapshot refresh (first sync, TRUNCATE) publishes the fetched window
+with ``target.overwrite`` in one job and observes the rows written and
+their maxima inside it. A one-bucket target (the plain ParquetTarget)
+is rewritten whole by any merge, so a changed INCREMENTAL or STANDARD
+cycle there publishes the window the same way (``SyncReport.write ==
+"window"``) and also observes its per-key counts. A partial-rewrite
+sink, and an -evolve cycle, keep ``target.merge`` (``"merge"``). Both
+must end every cycle with the same rows, state and counts."""
 
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from d365fo_db_sync_spark.sinks import BucketedParquetTarget, ParquetTarget
-from d365fo_db_sync_spark.state import StateStore
+from d365fo_db_sync_spark.state import StateStore, TableState
 from d365fo_db_sync_spark.sync import (
     INCREMENTAL,
     NO_CHANGE,
@@ -48,6 +49,19 @@ def engine(spark, tmp_path):
 def _rows(target, spark):
     cols = [c.split()[0] for c in SCHEMA.split(", ")]
     return sorted(tuple(r) for r in target.read(spark).select(*cols).collect())
+
+
+def _jobs_of(spark, run):
+    """``run()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _parquet_source(spark, tmp_path, rows):
@@ -95,9 +109,8 @@ def test_report_write_names_how_each_mode_published(spark, tmp_path, engine, lab
     rows = _incremental_change(rows, 1000)
     r = sync(rows)
     assert (r.mode, r.write) == (INCREMENTAL, delta_write)
-    # a NULL-version row compares modified in every STANDARD cycle, so
-    # the refresh drops it to leave the next state-loss compare clean
-    rows = [(x[0], x[1], x[2] + 5000, *x[3:]) for x in rows if x[2] is not None]
+    # the NULL-version row stays: a state-loss compare finds it unchanged
+    rows = [(x[0], x[1], None if x[2] is None else x[2] + 5000, *x[3:]) for x in rows]
     r = sync(rows)
     assert (r.mode, r.write) == (TRUNCATE, "window")
     engine.store.clear("T")
@@ -113,22 +126,44 @@ def test_report_write_names_how_each_mode_published(spark, tmp_path, engine, lab
     assert engine.merge_upsert("T", upsert.limit(0), target).write == ""
 
 
-def test_evolve_cycle_on_plain_target_merges(spark, tmp_path, engine):
-    # widen-and-retain keeps the survivors' values of a column the
-    # source dropped: only a merge has them
+def _narrowing_evolve_cycle(spark, tmp_path, engine, extra):
+    """A first sync, then an -evolve cycle whose source dropped
+    ``AMOUNT``, modified key 1040 and inserted 2000 plus ``extra``:
+    the report and each key's ``AMOUNT`` afterwards."""
     target = ParquetTarget(str(tmp_path / "tgt"))
     rows = make_rows(100)
     engine.sync_table("T", df_of(spark, rows), target)
-    # no late or NULL-version row: those lower the fetch floor, and
-    # every row fetched replaces its target copy
     rows = [(r[0], r[1], 1000, *r[3:]) if r[0] == 1040 else r for r in rows]
-    rows.append((2000, 2, 1001, None, dt.datetime(2024, 2, 1), 1.0))
+    rows += [(2000, 2, 1001, None, dt.datetime(2024, 2, 1), 1.0), *extra]
     narrower = df_of(spark, rows).drop("AMOUNT")
     r = engine.sync_table("T", narrower, target, evolve_schema=True)
+    return r, {x["RecId"]: x["AMOUNT"] for x in target.read(spark).collect()}
+
+
+def test_evolve_cycle_on_plain_target_merges(spark, tmp_path, engine):
+    # widen-and-retain keeps the survivors' values of a column the
+    # source dropped: only a merge has them
+    r, got = _narrowing_evolve_cycle(spark, tmp_path, engine, [])
     assert (r.mode, r.write) == (INCREMENTAL, "merge")
-    got = {x["RecId"]: x["AMOUNT"] for x in target.read(spark).collect()}
     assert got[1050] == 50 * 1.5  # a survivor keeps its dropped column
     assert got[2000] is None  # an insert has none
+
+
+def test_evolve_merge_with_late_rows_keeps_survivors_columns(spark, tmp_path, engine):
+    # a missing late row lowers the fetch floor to its version, a
+    # NULL-version one to 0, so the fetch returns nearly the whole
+    # window: only rows the target lacks or holds below their version
+    # may replace a target row
+    late = [
+        (2001, 2, 5, None, dt.datetime(2024, 1, 15), 7.0),
+        (2002, 2, None, None, dt.datetime(2024, 1, 16), 8.0),
+    ]
+    r, got = _narrowing_evolve_cycle(spark, tmp_path, engine, late)
+    assert (r.mode, r.write, r.missing) == (INCREMENTAL, "merge", 3)
+    assert got[1050] == 50 * 1.5
+    assert got[1040] is None  # modified: the source's copy has no AMOUNT
+    assert got[2001] is None and got[2002] is None
+    assert sorted(got) == list(range(1003, 1100)) + [2000, 2001, 2002]
 
 
 def test_plain_and_bucketed_targets_agree_cycle_by_cycle(spark, tmp_path, engine):
@@ -160,8 +195,8 @@ def test_plain_and_bucketed_targets_agree_cycle_by_cycle(spark, tmp_path, engine
     # missing: the four new keys; deleted: two deletes, two rows below
     # the risen edge and two modified rows, which are also inserted
     assert seen["plain", "incremental"][0][1:4] == (4, 6, 6)
-    # the NULL-version row compares modified (NULL == NULL is not true)
-    want = {"new": 5, "modified": 1, "unchanged": 94, "deleted": 5}
+    # the NULL-version row compares unchanged (NULL versions are equal)
+    want = {"new": 5, "unchanged": 95, "deleted": 5}
     assert seen["plain", "standard"][0][4] == want
 
 
@@ -175,17 +210,52 @@ def test_incremental_window_write_on_witnessed_target_runs_three_jobs(spark, tmp
     assert engine.sync_table("T", source, ParquetTarget(root)).probe == "scan"
 
     changed = _parquet_source(spark, tmp_path, _incremental_change(rows, 1000))
-    sc = spark.sparkContext
-    group = f"window-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "one-bucket INCREMENTAL cycle")
-    try:
-        r = engine.sync_table("T", changed, ParquetTarget(root))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    r, jobs = _jobs_of(spark, lambda: engine.sync_table("T", changed, ParquetTarget(root)))
     assert (r.mode, r.probe, r.write) == (INCREMENTAL, "witness", "window")
     assert (r.missing, r.inserted, r.deleted) == (4, 6, 6)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert jobs == 3
+
+
+def test_refresh_runs_one_job(spark, tmp_path, engine):
+    # a first sync and a forced TRUNCATE: the window write, which also
+    # observes the rows written and the maxima the state commits
+    source = _parquet_source(spark, tmp_path, make_rows(120))
+    root = str(tmp_path / "tgt")
+    for force in (False, True):
+        r, jobs = _jobs_of(
+            spark, lambda: engine.sync_table("T", source, ParquetTarget(root), force_truncate=force)
+        )
+        assert (r.mode, r.write, r.inserted, jobs) == (
+            TRUNCATE if force else STANDARD, "window", 100, 1
+        )
+        st = engine.store.get("T")
+        assert (st.src_ts, st.tgt_ts, st.max_transferred_key) == (219, 219, 1119)
+
+
+def test_first_sync_of_an_empty_source(spark, tmp_path, engine):
+    # an empty window observes no rows and NULL maxima, which the
+    # refresh commits over a stale state
+    target = ParquetTarget(str(tmp_path / "tgt"))
+    engine.store.commit("T", TableState(src_ts=7, tgt_ts=7, max_transferred_key=9))
+    r = engine.sync_table("T", df_of(spark, []), target)
+    assert (r.mode, r.write, r.inserted) == (STANDARD, "window", 0)
+    assert engine.store.get("T") == TableState()
+    assert target.read(spark).count() == 0
+
+
+def test_cost_fallback_commits_what_a_forced_truncate_commits(spark, tmp_path, engine):
+    # the R5 fallback and -truncate are one refresh: same rows, same state
+    rows = make_rows(100)
+    bumped = [(r[0], r[1], r[2] + 500, *r[3:]) if r[0] % 2 else r for r in rows]
+    seen = []
+    for name, force in (("R5", False), ("FORCED", True)):
+        target = ParquetTarget(str(tmp_path / name))
+        engine.sync_table(name, df_of(spark, rows), target)
+        r = engine.sync_table(name, df_of(spark, bumped), target, force_truncate=force)
+        assert (r.mode, r.write, r.inserted) == (TRUNCATE, "window", 100)
+        assert r.probe == ("" if force else "scan")
+        seen.append((_rows(target, spark), engine.store.get(name)))
+    assert seen[0] == seen[1]
 
 
 @pytest.mark.parametrize("path", ["incremental", "standard"])
@@ -223,15 +293,8 @@ def test_overwrite_pins_schema_for_fresh_handles(spark, tmp_path):
     live = ParquetTarget(root).current_path()
     assert os.path.exists(os.path.join(live, ParquetTarget.SCHEMA_SIDECAR))
 
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "fresh-handle read")
-    try:
-        pinned = ParquetTarget(root).read(spark)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    pinned, jobs = _jobs_of(spark, lambda: ParquetTarget(root).read(spark))
+    assert jobs == 0
     assert pinned.schema == spark.read.parquet(live).schema
     assert sorted(tuple(r) for r in pinned.collect()) == sorted(tuple(r) for r in df.collect())
 
