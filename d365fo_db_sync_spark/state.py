@@ -32,8 +32,9 @@ class TableState:
     next_sequence: int | None = None  # T7 fencing state
     #: target half of the no-change probe, learned by a scan that found
     #: the table in sync: {path, rows, sum1, sum2, max_ver} of the live
-    #: version directory at ``path`` (immutable once published). Every
-    #: post-write commit builds a fresh TableState, which drops it.
+    #: version directory named ``path``, relative to the target root
+    #: (immutable once published). Every post-write commit builds a
+    #: fresh TableState, which drops it.
     witness: dict | None = None
 
 

@@ -6,9 +6,12 @@ onto DataFrame ops + an atomic-rewrite sink:
 * control scan + change-volume evaluation  -> scans.control_scan + counts
 * cost-based mode selection (R5/T2)        -> NO_CHANGE / INCREMENTAL /
   TRUNCATE / STANDARD, threshold 40% (AppConfiguration.cs:39)
-* perfect-sync fast path (R6)              -> one shuffle-free aggregate;
-  its target half is memoized in StateStore per live version directory,
-  so a no-change cycle on a known version reads only the source
+* perfect-sync fast path (R6)              -> one shuffle-free aggregate
+  built from SQL expression strings (a few Py4J round trips); each
+  salted 64-bit key-hash sum runs as two BIGINT halves joined exactly
+  in Python (no overflow below 2^31 rows; ANSI mode raises beyond). Its
+  target half is memoized in StateStore per live version directory
+  name, so a no-change cycle on a known version reads only the source
 * snapshot refresh (first sync, -truncate,
   the R5 fallback)                         -> ONE job: _publish_window
   writes fetcher.full() and observes the rows written and their maxima
@@ -27,7 +30,8 @@ onto DataFrame ops + an atomic-rewrite sink:
   classified by delta.change_type (CompareRecords); target keys outside
   the window are deleted, and a cycle that finds no change writes
   nothing. A change is published as INCREMENTAL publishes it: the
-  cached window by _publish_window on a one-bucket target, else a merge
+  cached window by _publish_window on a one-bucket target, whose
+  observation supplies the committed maxima, else a merge
 * late-data widening (T4)                  -> fetch threshold =
   min(stored watermark, min version among keys missing from target)
   (CopyOrchestrator.cs:1106-1123)
@@ -47,6 +51,7 @@ HashSets, CopyOrchestrator.cs:1018-1022).
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field, replace
 
@@ -66,7 +71,10 @@ INCREMENTAL = "INCREMENTAL"
 TRUNCATE = "TRUNCATE"
 STANDARD = "STANDARD"
 
-#: the R6 probe and INCREMENTAL's pairing compare the version column only
+#: the second key hash's salt: xxhash64(key, 0x5EED) next to xxhash64(key)
+_SALT = 0x5EED
+
+#: INCREMENTAL's pairing compares the version column only
 _BY_VERSION = delta.ComparisonContext(has_recversion=True, has_created=False, has_modified=False)
 
 
@@ -112,21 +120,32 @@ class SyncReport:
     write: str = ""
 
 
-def _witness_of(row, path: str) -> dict:
-    """The target half of a two-sided R6 probe row, stored as the
-    witness of the version directory at ``path``. The key-hash sums are
-    kept as exact ints (the probe sums them as DECIMAL(38))."""
-
-    def exact(v):
-        return None if v is None else int(v)
-
+def _witness_of(row: dict, version: str) -> dict:
+    """The target half of a two-sided _probe row, stored as the witness
+    of the live version directory named ``version`` (relative to the
+    target root)."""
+    max_ver = row["t_max_ver"]
     return {
-        "path": path,
+        "path": version,
         "rows": row["tgt_total"],
-        "sum1": exact(row["t_sum1"]),
-        "sum2": exact(row["t_sum2"]),
-        "max_ver": exact(row["t_max_ver"]),
+        "sum1": row["t_sum1"],
+        "sum2": row["t_sum2"],
+        "max_ver": None if max_ver is None else int(max_ver),
     }
+
+
+def _live_version(target: ParquetTarget) -> str | None:
+    """The live version directory's name relative to the target root,
+    the key a witness is stored under: unlike the absolute path, it
+    does not depend on where the target sits."""
+    path = target.current_path()
+    return None if path is None else os.path.relpath(path, target.root)
+
+
+def _quoted(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, any backtick
+    inside doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _writes_window(target: ParquetTarget, evolve_schema: bool) -> bool:
@@ -158,7 +177,7 @@ def _with_in_target(window: DataFrame, tgt_df: DataFrame, key: str) -> DataFrame
     return window.join(tgt_df.select(key, F.lit(True).alias("__in_target")), on=key, how="left")
 
 
-def _witnessed_target(state: TableState, path: str | None) -> dict | None:
+def _witnessed_target(state: TableState, version: str | None) -> dict | None:
     """The target half of the R6 probe as the stored witness certifies
     it, or None when the probe must scan the target. The witness holds
     only for the version it was learned on — a published version
@@ -166,7 +185,7 @@ def _witnessed_target(state: TableState, path: str | None) -> dict | None:
     only while no witnessed row sits above ``tgt_ts``, which is exactly
     ``tgt_changed == 0``."""
     w = state.witness
-    if w is None or w["path"] != path:
+    if w is None or w["path"] != version:
         return None
     if w["max_ver"] is not None and (state.tgt_ts is None or w["max_ver"] > state.tgt_ts):
         return None
@@ -443,11 +462,12 @@ class SyncEngine:
         key, ver = cfg.key, cfg.version
 
         # S6: 2-column control scan of the sync window (strategy-aware:
-        # SQL templates get their star rewritten to (key, version)).
-        # NOT cached yet: the no-change and truncate branches read it
-        # exactly once, so materializing a cache there is pure overhead;
-        # the incremental branch caches before its multi-join reuse.
-        control = fetcher.control().select(key, ver)
+        # SQL templates get their star rewritten to (key, version); the
+        # probe projects the two columns itself). NOT cached yet: the
+        # no-change and truncate branches read it exactly once, so
+        # materializing a cache there is pure overhead; the merge branch
+        # caches before its multi-join reuse.
+        control = fetcher.control()
 
         # R6 probe: counts + dual key checksums, ZERO shuffle. Its source
         # half runs every cycle; its target half is memoized per live
@@ -456,16 +476,16 @@ class SyncEngine:
         # ONE source-only aggregate and never opens the target; else
         # both sides are scanned, and a cycle that ends NO_CHANGE stores
         # the target half it scanned.
-        live = target.current_path()
+        live = _live_version(target)
         known = _witnessed_target(state, live)
         tgt_df = None
         if known is not None:
             probe = "witness"
-            row = {**self._fastpath_metrics(control, None, state).first().asDict(), **known}
+            row = {**self._probe(control, None, state), **known}
         else:
             probe = "scan"
             tgt_df = target.read(self.spark)
-            row = self._fastpath_metrics(control, tgt_df, state).first().asDict()
+            row = self._probe(control, tgt_df, state)
         control_rows, src_changed = row["control_rows"], row["src_changed"]
         min_key, max_key, max_ver = row["min_key"], row["max_key"], row["max_ver"]
         tgt_total, tgt_changed = row["tgt_total"], row["tgt_changed"]
@@ -535,7 +555,7 @@ class SyncEngine:
         # headline is about) never reaches this shuffle.
         # Cache control now: the pairing pass + changed_keys + merge
         # joins all re-read it.
-        control = control.cache()
+        control = control.select(key, ver).cache()
         try:
             row = self._premerge_metrics(control, tgt_df, state).first()
             missing, survivors_cnt = row["missing"], row["survivors"]
@@ -598,13 +618,21 @@ class SyncEngine:
     ) -> DataFrame:
         """The R6 no-change probe: A6/A7 counts, window bounds, and a
         key-SET equality witness, all in ONE map-only aggregation over
-        the tagged union — ZERO exchanges before the final singleton.
+        each side's projection of key, version and key hashes — ZERO
+        exchanges before the final singleton. Built from SQL expression
+        strings: one ``selectExpr`` projects each side and one
+        aggregates, a handful of Py4J round trips where Column objects
+        cost several per node.
 
         Set equality without pairing: both sides are unique on the key,
         so equal counts + equal exact sums of two independent 64-bit key
-        hashes (xxhash64 with distinct salts, summed as DECIMAL(38) so
-        no overflow wraps) certify control-keys == target-keys with
-        collision odds ~2^-128 for non-adversarial keys. The per-key
+        hashes (xxhash64 with distinct salts, over non-NULL keys)
+        certify control-keys == target-keys with collision odds ~2^-128
+        for non-adversarial keys. Each hash is summed as two BIGINT
+        halves, ``<sum>_lo`` = sum(h & 0xFFFFFFFF) and ``<sum>_hi`` =
+        sum(h >> 32), which _probe joins into the exact integer sum.
+        Neither half can overflow below 2^31 rows; beyond that, ANSI
+        mode raises on the overflow instead of wrapping. The per-key
         pairing pass (_premerge_metrics) runs only once something
         actually changed.
 
@@ -617,31 +645,57 @@ class SyncEngine:
         source and nothing else at ANY scale. With a target frame the
         row adds its half: ``tgt_total``, ``tgt_changed``, ``t_sum*``
         and ``t_max_ver``, the fields a witness stores."""
-        s_key, t_key = F.col(f"s_{self.config.key}"), F.col(f"t_{self.config.key}")
-        tagged = self._tag_sides(control, tgt_df, _BY_VERSION)
+        key, ver = _quoted(self.config.key), _quoted(self.config.version)
 
-        def key_hash(k, *salt):
-            return F.xxhash64(k, *salt).cast("decimal(38,0)")
+        def side(df: DataFrame, tag: str) -> DataFrame:
+            return df.selectExpr(
+                f"{key} AS {tag}_k",
+                f"{ver} AS {tag}_v",
+                f"CASE WHEN {key} IS NOT NULL THEN xxhash64({key}) END AS {tag}_h1",
+                f"CASE WHEN {key} IS NOT NULL THEN xxhash64({key}, {_SALT}) END AS {tag}_h2",
+            )
 
-        source_half = [
-            F.count(s_key).alias("control_rows"),
-            F.count(F.when(F.col("s_rv") > F.lit(state.src_ts), 1)).alias("src_changed"),
-            F.min(s_key).alias("min_key"),
-            F.max(s_key).alias("max_key"),
-            F.max("s_rv").alias("max_ver"),
-            F.sum(F.when(s_key.isNotNull(), key_hash(s_key))).alias("c_sum1"),
-            F.sum(F.when(s_key.isNotNull(), key_hash(s_key, F.lit(0x5EED)))).alias("c_sum2"),
+        def changed(tag: str, ts: int | None) -> str:
+            bound = "NULL" if ts is None else f"{int(ts)}L"
+            return f"count(CASE WHEN {tag}_v > {bound} THEN 1 END)"
+
+        def split_sums(tag: str, name: str) -> list[str]:
+            return [
+                f"sum({tag}_h{i} {op}) AS {name}{i}_{part}"
+                for i in (1, 2)
+                for part, op in (("lo", "& 4294967295"), ("hi", ">> 32"))
+            ]
+
+        sides = side(control, "s")
+        aggs = [
+            "count(s_k) AS control_rows",
+            f"{changed('s', state.src_ts)} AS src_changed",
+            "min(s_k) AS min_key",
+            "max(s_k) AS max_key",
+            "max(s_v) AS max_ver",
+            *split_sums("s", "c_sum"),
         ]
-        if tgt_df is None:
-            return tagged.agg(*source_half)
-        return tagged.agg(
-            *source_half,
-            F.count(t_key).alias("tgt_total"),
-            F.count(F.when(F.col("t_rv") > F.lit(state.tgt_ts), 1)).alias("tgt_changed"),
-            F.sum(F.when(t_key.isNotNull(), key_hash(t_key))).alias("t_sum1"),
-            F.sum(F.when(t_key.isNotNull(), key_hash(t_key, F.lit(0x5EED)))).alias("t_sum2"),
-            F.max("t_rv").alias("t_max_ver"),
-        )
+        if tgt_df is not None:
+            sides = sides.unionByName(side(tgt_df, "t"), allowMissingColumns=True)
+            aggs += [
+                "count(t_k) AS tgt_total",
+                f"{changed('t', state.tgt_ts)} AS tgt_changed",
+                *split_sums("t", "t_sum"),
+                "max(t_v) AS t_max_ver",
+            ]
+        return sides.selectExpr(*aggs)
+
+    def _probe(
+        self, control: DataFrame, tgt_df: DataFrame | None, state: TableState
+    ) -> dict:
+        """The _fastpath_metrics row with each key-hash sum's halves
+        joined in Python as ``(hi << 32) + lo``: the exact integer
+        sum of the salted hashes, None when no key was summed."""
+        row = self._fastpath_metrics(control, tgt_df, state).first().asDict()
+        for name in [c[: -len("_lo")] for c in row if c.endswith("_lo")]:
+            lo, hi = row.pop(f"{name}_lo"), row.pop(f"{name}_hi")
+            row[name] = None if lo is None else (hi << 32) + lo
+        return row
 
     def _learn_witness(self, name: str, probed: TableState, witness: dict) -> None:
         """Store the target half a scan probe found in sync, under the
@@ -655,38 +709,28 @@ class SyncEngine:
 
         self.store.merge_commit(name, replace(probed, witness=witness), _merge)
 
-    def _tag_sides(
-        self, src: DataFrame, tgt_df: DataFrame | None, context: delta.ComparisonContext
-    ) -> DataFrame:
-        """Both sides' rows in one frame: each side's compared columns
-        under its own prefix (delta.side_columns: ``s_<key>``, ``s_rv``,
-        ... on source rows; ``t_*`` on target rows), NULL on the other
-        side's rows, so a non-NULL ``s_<key>``/``t_<key>`` tags a row's
-        side. ``tgt_df=None`` tags the source side alone."""
-        names = dict(key=self.config.key, recversion=self.config.version)
-        tagged = src.select(*delta.side_columns("s", context, **names))
-        if tgt_df is not None:
-            tagged = tagged.unionByName(
-                tgt_df.select(*delta.side_columns("t", context, **names)),
-                allowMissingColumns=True,
-            )
-        return tagged
-
     def _pair_by_key(
         self, src: DataFrame, tgt_df: DataFrame, context: delta.ComparisonContext
     ) -> DataFrame:
         """The per-key pairing of both delta modes: one row per key seen
         on either side, carrying both sides' compared columns — the
         shape delta.classify_changes gets from a full-outer join, here
-        from the tagged union and ONE groupBy on the key. Both sides are
-        unique on the key (the target is the keyed table, the source the
-        top-N window of one), so every ``s_*``/``t_*`` column has at most
-        one non-NULL value per key and max() recovers it. One
+        from a tagged union and ONE groupBy on the key. Each side's
+        compared columns sit under its own prefix (delta.side_columns:
+        ``s_<key>``, ``s_rv``, ... on source rows; ``t_*`` on target
+        rows), NULL on the other side's rows. Both sides are unique on
+        the key (the target is the keyed table, the source the top-N
+        window of one), so every ``s_*``/``t_*`` column has at most one
+        non-NULL value per key and max() recovers it. One
         hash-partition exchange, no join and no sort: a full-outer
         equi-join cannot broadcast and costs two exchanges plus two
         sorts."""
         key = self.config.key
-        tagged = self._tag_sides(src, tgt_df, context)
+        names = dict(key=key, recversion=self.config.version)
+        tagged = src.select(*delta.side_columns("s", context, **names)).unionByName(
+            tgt_df.select(*delta.side_columns("t", context, **names)),
+            allowMissingColumns=True,
+        )
         return tagged.groupBy(F.coalesce(f"s_{key}", f"t_{key}").alias(key)).agg(
             *[F.max(c).alias(c) for c in tagged.columns]
         )
@@ -764,33 +808,35 @@ class SyncEngine:
             kinds = (delta.NEW, delta.MODIFIED, delta.DELETED)
             counts = changed.agg(*[F.count(F.when(kind == t, 1)).alias(t) for t in kinds]).first()
             counts = counts.asDict()
-            window = fetched.agg(*self._window_stats(fetched)).first()
-            counts[delta.UNCHANGED] = window["rows"] - counts[delta.NEW] - counts[delta.MODIFIED]
             report = SyncReport(
                 table=name,
                 mode=STANDARD,
-                classification={t: counts[t] for t in delta.CHANGE_TYPES if counts[t]},
                 inserted=counts[delta.MODIFIED] + counts[delta.NEW],
                 deleted=counts[delta.MODIFIED] + counts[delta.DELETED],
             )
             if (report.inserted or report.deleted) and window_write:
                 # a merge would rewrite the whole table: publish the
-                # cached window the classification just read
+                # cached window the classification just read, taking
+                # its rows and maxima from the write's own observation
                 _check_drift(tgt_df, fetched)
-                self._publish_window(fetched, target)
+                window = self._publish_window(fetched, target)
                 report.write = "window"
-            elif report.inserted or report.deleted:
-                # a deleted key matches no fetched row and a new one no
-                # target row, so one key set is both the upserts' filter
-                # and the doomed keys
-                keys = changed.select(key)
-                target.merge(
-                    self.spark,
-                    fetched.join(keys, on=key, how="left_semi"),
-                    keys,
-                    evolve_schema=evolve_schema,
-                )
-                report.write = "merge"
+            else:
+                window = fetched.agg(*self._window_stats(fetched)).first()
+                if report.inserted or report.deleted:
+                    # a deleted key matches no fetched row and a new one
+                    # no target row, so one key set is both the upserts'
+                    # filter and the doomed keys
+                    keys = changed.select(key)
+                    target.merge(
+                        self.spark,
+                        fetched.join(keys, on=key, how="left_semi"),
+                        keys,
+                        evolve_schema=evolve_schema,
+                    )
+                    report.write = "merge"
+            counts[delta.UNCHANGED] = window["rows"] - counts[delta.NEW] - counts[delta.MODIFIED]
+            report.classification = {t: counts[t] for t in delta.CHANGE_TYPES if counts[t]}
             # full-window fetch: the fetched maxima ARE the source's
             # truth, so overwrite (a restore-lowered rowversion must stick)
             self._commit_state(name, window["max_key"], window["max_ver"], overwrite=True)

@@ -24,6 +24,7 @@ from d365fo_db_sync_spark.sync import (
     STANDARD,
     SyncConfig,
     SyncEngine,
+    _live_version,
     _witness_of,
 )
 
@@ -68,7 +69,7 @@ def _learn(engine, target, source):
     r2 = engine.sync_table("T", source, target)
     assert (r2.mode, r2.probe) == (NO_CHANGE, "scan")
     w = engine.store.get("T").witness
-    assert w is not None and w["path"] == target.current_path()
+    assert w is not None and w["path"] == _live_version(target)
     assert w["rows"] == 100
     return w
 
@@ -141,9 +142,7 @@ def test_witness_above_target_watermark_is_ignored(env):
     ).collect()
     make_target().overwrite(spark.createDataFrame(bumped, target.read(spark).schema))
     tgt_df = target.read(spark)
-    w = _witness_of(
-        engine._fastpath_metrics(tgt_df, tgt_df, st).first(), target.current_path()
-    )
+    w = _witness_of(engine._probe(tgt_df, tgt_df, st), _live_version(target))
     assert w["max_ver"] == st.tgt_ts + 1
     engine.store.commit("T", dataclasses.replace(st, witness=w))
 
@@ -173,7 +172,30 @@ def test_state_file_without_witness_loads(env, tmp_path):
     assert engine.store.get("T").witness is None
     r = engine.sync_table("T", source, target)
     assert (r.mode, r.probe) == (NO_CHANGE, "scan")
-    assert engine.store.get("T").witness["path"] == target.current_path()
+    assert engine.store.get("T").witness["path"] == _live_version(target)
+
+
+@pytest.mark.fast
+def test_absolute_path_witness_is_relearned(env, tmp_path):
+    # a state file from before witnesses were keyed by the version
+    # directory's name holds the live version's absolute path: it must
+    # never match, so one cycle scans and re-learns the name, and the
+    # next one takes the witness
+    spark, engine, make_target, source = env
+    target = make_target()
+    w = _learn(engine, target, source)
+    path = str(tmp_path / "old_state.json")
+    old = dataclasses.asdict(engine.store.get("T"))
+    old["witness"] = {**w, "path": target.current_path()}
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump({"T": old}, f)
+
+    engine.store = StateStore(path)
+    r = engine.sync_table("T", source, target)
+    assert (r.mode, r.probe) == (NO_CHANGE, "scan")
+    assert engine.store.get("T").witness == w
+    r = engine.sync_table("T", source, target)
+    assert (r.mode, r.probe) == (NO_CHANGE, "witness")
 
 
 @pytest.mark.fast
@@ -193,7 +215,7 @@ def test_write_drops_witness_and_changed_cycle_repairs(env):
     r = engine.sync_table("T", changed, target)
     assert (r.mode, r.probe) == (INCREMENTAL, "witness")
     assert engine.store.get("T").witness is None
-    assert target.current_path() != w["path"]
+    assert _live_version(target) != w["path"]
     assert _rows(target, spark) == _window(spark, changed)
 
     # no probe runs on a forced refresh or a CDC merge

@@ -226,21 +226,20 @@ def test_noop_fastpath_probe_zero_shuffle(spark):
     engine = SyncEngine(
         spark, StateStore(tempfile.mktemp(suffix=".json")), SyncConfig()
     )
-    probe = engine._fastpath_metrics(src, src, TableState(src_ts=10**12, tgt_ts=10**12))
-    ops = physical_operators(probe)
+    state = TableState(src_ts=10**12, tgt_ts=10**12)
+    ops = physical_operators(engine._fastpath_metrics(src, src, state))
     assert not [o for o in ops if "Join" in o], ops
     assert ops.count("Exchange") <= 1, ops  # only the final singleton
-    row = probe.first()
+    row = engine._probe(src, src, state)
     assert row["control_rows"] == row["tgt_total"]
     assert row["src_changed"] == 0 and row["tgt_changed"] == 0
     assert row["c_sum1"] == row["t_sum1"] and row["c_sum2"] == row["t_sum2"]
     # the source half alone (the probe of a witnessed target version)
-    src_only = engine._fastpath_metrics(src, None, TableState(src_ts=10**12, tgt_ts=10**12))
-    ops = physical_operators(src_only)
+    ops = physical_operators(engine._fastpath_metrics(src, None, state))
     assert not [o for o in ops if "Join" in o], ops
     assert ops.count("Exchange") <= 1, ops
-    half = src_only.first()
-    assert "tgt_total" not in half.asDict()
+    half = engine._probe(src, None, state)
+    assert "tgt_total" not in half
     assert (half["control_rows"], half["c_sum1"], half["c_sum2"]) == (
         row["control_rows"], row["c_sum1"], row["c_sum2"]
     )
@@ -263,7 +262,7 @@ def test_noop_fastpath_checksum_catches_swapped_keys(spark):
     engine = SyncEngine(
         spark, StateStore(tempfile.mktemp(suffix=".json")), SyncConfig()
     )
-    row = engine._fastpath_metrics(a, b, TableState(src_ts=10**12, tgt_ts=10**12)).first()
+    row = engine._probe(a, b, TableState(src_ts=10**12, tgt_ts=10**12))
     assert row["control_rows"] == row["tgt_total"]
     assert row["c_sum1"] != row["t_sum1"]
     assert row["c_sum2"] != row["t_sum2"]

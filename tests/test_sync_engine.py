@@ -791,7 +791,7 @@ def test_fastpath_decision_matches_logical_condition(env):
             [(k, v) for k, v in tgt.items()] or [(None, None)],
             "RecId long, SysRowVersion long",
         ).filter("RecId IS NOT NULL")
-        row = engine._fastpath_metrics(c, t, state).first().asDict()
+        row = engine._probe(c, t, state)
         if probe == "witness":
             # learn the witness from tgt, then decide as the engine does:
             # source-only probe plus the witnessed half, or a scan when
@@ -801,7 +801,7 @@ def test_fastpath_decision_matches_logical_condition(env):
             assert (known is None) == any(v is not None and v > ts for v in tgt.values())
             assert _witnessed_target(learned, "v_other") is None
             if known is not None:
-                row = {**engine._fastpath_metrics(c, None, learned).first().asDict(), **known}
+                row = {**engine._probe(c, None, learned), **known}
         return (
             row["src_changed"] == 0
             and row["tgt_changed"] == 0

@@ -216,6 +216,27 @@ def test_incremental_window_write_on_witnessed_target_runs_three_jobs(spark, tmp
     assert jobs == 3
 
 
+def test_changed_standard_window_write_commits_observed_maxima(spark, tmp_path, engine):
+    # a state-loss cycle that finds a change on a one-bucket target
+    # commits the rows and maxima its window write observed, with no
+    # separate stats job over the window
+    rows = make_rows(120)
+    root = str(tmp_path / "tgt")
+    engine.sync_table("T", _parquet_source(spark, tmp_path, rows), ParquetTarget(root))
+    engine.store.clear("T")
+    changed = _incremental_change(rows, 1000)
+    source = _parquet_source(spark, tmp_path, changed)
+    r, jobs = _jobs_of(spark, lambda: engine.sync_table("T", source, ParquetTarget(root)))
+    assert (r.mode, r.write) == (STANDARD, "window")
+    assert sum(n for k, n in r.classification.items() if k != "deleted") == 100
+    assert jobs == 5  # 6 with a separate stats job
+    window = sorted(changed, key=lambda row: row[0])[-100:]
+    st = engine.store.get("T")
+    top_ver = max(row[2] for row in window if row[2] is not None)
+    assert (st.src_ts, st.tgt_ts, st.max_transferred_key) == (top_ver, top_ver, window[-1][0])
+    assert _rows(ParquetTarget(root), spark) == sorted(window)
+
+
 def test_refresh_runs_one_job(spark, tmp_path, engine):
     # a first sync and a forced TRUNCATE: the window write, which also
     # observes the rows written and the maxima the state commits
